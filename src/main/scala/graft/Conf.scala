@@ -26,7 +26,9 @@ object Conf {
     *    sorts, joins) that a 1-task coalesced stage serializes for longer
     *    than 32-task scheduling costs. Both knobs stay parameterized
     *    (`SPARK_GRAFT_AQE_PARALLELISM_FIRST`,
-    *    `SPARK_GRAFT_ADVISORY_PARTITION_BYTES`) for cluster tuning.
+    *    `SPARK_GRAFT_ADVISORY_PARTITION_BYTES`) for cluster tuning. The
+    *    foreachBatch pipeline drains ignore the first knob: they always
+    *    run `parallelismFirst=false` (StreamQueries.withBatchCoalesce).
     *
     * Returns the builder for chaining.
     */

@@ -5,6 +5,7 @@ import graft.ml.Similarity
 import graft.text.{Bpe, TextOps}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Skew/scale harness for the dedup/LSH family over a [[DocFixture]]
   * corpus (millions of rows with an injected boilerplate mega-cluster):
@@ -13,7 +14,9 @@ import org.apache.spark.sql.functions._
   * Without the caps the mega-bucket emits ~10¹⁰ candidate pairs and none
   * of these finish — the point of the fixture is measuring that the caps
   * and the 4×16-bit banding keep the job linear under exactly the skew
-  * they were designed for.
+  * they were designed for. The `corpus_e2e_live_*` cells run the shipped
+  * live corpus pipeline ([[graft.queries.CorpusPipeline.onBatch]], the
+  * `streaming_corpus_*` gates' per-batch body) over the same fixture.
   *
   * Usage: SPARK_GRAFT_DOC_FIXTURE=<dir> [SPARK_GRAFT_DOC_CPUS=8,32]
   *        runMain graft.DocBench
@@ -69,184 +72,54 @@ object DocBench {
     } finally pendingCleanup += dir
   }
 
-  /** The FULL live corpus pipeline (the streaming_corpus_e2e chain) at
-    * fixture scale: the corpus arrives in `nBatches` hash-split batches;
-    * each runs quality + langid filter → exact-dedup probe against the
-    * hashes ingested so far → CAPPED LSH probe against the survivors-so-
-    * far index, then appends its own survivors' bands → hash-gated shard
-    * assignment. State (seen hashes, survivor store) lives in parquet
-    * dirs appended per batch and re-read by the next, exactly like the
-    * gate; the index is the stored bucketed table, so per-batch probe
-    * cost is delta-scaled exactly like [[ingestBatches]]. Returns total
-    * surviving docs.
+  /** The live corpus pipeline at fixture scale: the SHIPPED per-batch body
+    * of the `streaming_corpus_*` gates ([[graft.queries.CorpusPipeline]]
+    * — overwrite-scoped publishes, as-of probes, idempotent index
+    * publish) driven by this loop instead of a stream, with the fixture's
+    * index tuning (32 buckets, probe capped at `maxBucket`, jaccard 0.7).
+    * The first `trainFrac` of the corpus (by salted hash) arrives in
+    * `nBatches` hash-split batches; a held-out rest becomes the static
+    * decontamination benchmark and selects the full-suite front. The
+    * fixture's template mega-cluster spans both splits, so decon really
+    * fires: every arriving boiler doc overlaps the benchmark. `batchIdx`
+    * overrides the arrival order for adversarial cells (e.g. the
+    * mega-cluster concentrated in ONE batch). Returns total surviving
+    * docs.
     */
   private def corpusE2eBatches(spark: SparkSession,
                                docs: org.apache.spark.sql.DataFrame,
                                nBatches: Int,
                                batchIdx: Option[org.apache.spark.sql.Column] = None,
                                tag: String = "",
-                               fullSuite: Boolean = false): Long = {
-    // default arrival order: hash-uniform batches. batchIdx overrides it
-    // for adversarial-arrival cells (e.g. the mega-cluster concentrated in
-    // ONE batch) — the chain itself is identical either way.
-    // fullSuite = the streaming_corpus_e2e_full chain: only the 90% train
-    // split arrives (the held-out 10% is the static decontamination
-    // benchmark), and each batch adds PII redaction at entry, Gopher
-    // repetition thresholds, and the benchmark-gram probe before dedup.
-    val trainFrac = if (fullSuite) 0.9 else 1.0
+                               trainFrac: Double = 1.0): Long = {
+    import graft.queries.CorpusPipeline
     val salted = docs.withColumn("__h",
       graft.ml.Sampling.hash32(col("doc_id"), "live"))
     val cut = (i: Int) =>
       ((i.toDouble / nBatches) * trainFrac * 4294967296.0).toLong
     val table = s"docbench_live_idx$nBatches$tag"
-    var benchBloom: Array[Byte] = null
-    val benchDir = if (!fullSuite) null else {
-      // day-0 static state, staged once like the gate's /bench dir: the
-      // held-out split's distinct n-gram hashes over REDACTED text, plus
-      // the companion xx-gram bloom (the gate's scan-stage decon
-      // pre-filter — only possible-hit rows pay the gram explode + exact
-      // semi-join; no false negatives). The fixture's template
-      // mega-cluster spans both splits, so the probe REALLY fires: every
-      // arriving boiler doc overlaps the benchmark and dies at decon —
-      // boilerplate-vs-benchmark overlap at 10⁵ scale.
-      val d = java.nio.file.Files
-        .createTempDirectory("docbench_live_bench").toString
-      val benchDocs = salted.where(col("__h") >= cut(nBatches))
-        .select(col("doc_id"), TextOps.redact(col("text")).as("text"))
-        .withColumn("toks", TextOps.wsTokens(col("text")))
-      graft.dedup.Substring.distinctGramHashes(benchDocs,
-          "doc_id", "toks", graft.queries.PipeQueries.contamN)
-        .select("h").distinct().write.mode("overwrite").parquet(d)
-      benchBloom = graft.dedup.Substring.gramXxBloom(benchDocs, "toks",
-        graft.queries.PipeQueries.contamN)
-      d
-    }
-    val dir = java.nio.file.Files
-      .createTempDirectory("docbench_live_idx").toString
-    Dedup.writeLshIndex(docs.limit(0).select("doc_id", "text", "toks"),
-      "doc_id", "toks", shingleN, minhashK, minhashBands, table, dir,
-      buckets = 32, srcBatch = Some(-1L))
-    // state lives in BATCH-SCOPED PARQUET PARTITIONS exactly like the gate
-    // (seen hashes, survivor store: StateStore batch= layout, published
-    // per batch and re-READ as-of by the next batch) — not as cumulative
-    // lineage unions. A lineage union re-executes every PRIOR batch's full
-    // filter chain inside each later batch's probe (measured: the
-    // full-suite cell paid ~3× its per-batch chain cost), where the gate's
-    // discipline is cost ∝ delta: state reads are file scans. Survivors
-    // are STAGED to a batch-scoped path before any state publish (the
-    // gate's cache-invalidation bug class). This cell measures the SHIPPED
-    // exactly-once mechanics (overwrite-scoped publishes, as-of probes,
-    // idempotent index publish), not a simplified append variant.
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("docbench_live_state").toString
-    graft.sources.StateStore.publishBatch(
-      docs.limit(0).select(md5(col("text")).as("content_hash")),
-      stateDir + "/seen", -1L)
-    graft.sources.StateStore.publishBatch(
-      docs.limit(0).select("doc_id", "text", "toks"),
-      stateDir + "/store", -1L)
-    var survivors = 0L
+    val root = java.nio.file.Files
+      .createTempDirectory("docbench_live").toString
     try {
-    for (i <- 1 to nBatches) {
-      val inBatch = batchIdx match {
-        case Some(bi) => bi === (i - 1)
-        case None => col("__h") >= cut(i - 1) && col("__h") < cut(i)
-      }
-      // full suite: PII redaction at entry — everything downstream
-      // (quality, langid, repetition, gram hashes, dedup) runs over the
-      // scrubbed text, exactly as in streaming_corpus_e2e_full. The
-      // redacted batch is STAGED before any scoring: as a computed
-      // column, `redact(raw)` would be INLINED into every downstream
-      // quality/langid/HOF expression (HOF-bearing projections don't get
-      // codegen subexpression elimination), re-running the 3-regex scrub
-      // ~6-8x per row — measured ~26 s/batch of the fixture cell, ~70%
-      // of its pre-fix stage-0 cost. Staging makes text/toks plain
-      // attributes: one redact per row, one tokenization per row.
-      val b = if (!fullSuite) salted.where(inBatch).select("doc_id", "text", "toks")
-        else {
-          salted.where(inBatch)
-            .select(col("doc_id"), TextOps.redact(col("text")).as("text"),
-              TextOps.wsTokens(TextOps.redact(col("text"))).as("toks"))
-            .write.mode("overwrite").parquet(stateDir + s"/fbr/$i")
-          spark.read.parquet(stateDir + s"/fbr/$i")
+      val front = CorpusPipeline.day0(spark, docs, table, root, buckets = 32,
+        bench = Option.when(trainFrac < 1.0)(
+          salted.where(col("__h") >= cut(nBatches))))
+      for (i <- 1 to nBatches) {
+        val inBatch = batchIdx match {
+          case Some(bi) => bi === (i - 1)
+          case None => col("__h") >= cut(i - 1) && col("__h") < cut(i)
         }
-      val scored = b.select(
-        Seq(col("doc_id"), col("text"), col("toks")) ++
-          TextOps.qualityColumns(col("text")) ++
-          Seq(TextOps.langIdColumns(col("text")).last): _*)
-      val keptQ = scored
-        .where(col("pred_lang") === "en" && col("quality_score") >= 0.5)
-        .select("doc_id", "text", "toks")
-      val keptF = if (!fullSuite) keptQ else {
-        // Gopher repetition thresholds (per-row, scan-stage), STAGED
-        // before the decon probe: the probe and the anti-join's left side
-        // both reference this subtree, and an unpersisted subtree
-        // re-executes per appearance — the whole redact/quality/langid/
-        // repetition chain would run twice per batch (the gate's
-        // discipline, measured ~40% of this cell). Then the BLOOM-BOUNDED
-        // decontamination probe over the staged columnar toks: the
-        // scan-stage pre-filter clears provably-benchmark-free rows, only
-        // possible hits pay the gram explode + exact semi-join.
-        keptQ.where(TextOps.keepRepetition(col("text"), col("toks")))
-          .write.mode("overwrite").parquet(stateDir + s"/fb0/$i")
-        val kr = spark.read.parquet(stateDir + s"/fb0/$i")
-        val maybe = kr.where(graft.dedup.Substring.mightContainGram(
-          col("toks"), graft.queries.PipeQueries.contamN, benchBloom))
-        val contam = graft.dedup.Substring.distinctGramHashes(
-            maybe, "doc_id", "toks", graft.queries.PipeQueries.contamN)
-          .join(spark.read.parquet(benchDir), Seq("h"), "left_semi")
-          .select("doc_id").distinct()
-        kr.join(contam, Seq("doc_id"), "left_anti")
+        CorpusPipeline.onBatch(spark, table, root, front, buckets = 32,
+          maxBucket = maxBucket, threshold = 0.7)(salted.where(inBatch), i)
       }
-      // STAGE the filtered batch once (the gate's discipline): its subtree
-      // otherwise re-evaluates the per-row filter expressions ~4× per
-      // batch (exact probe, delta band rows, jaccard side, seen append)
-      keptF.write.mode("overwrite").parquet(stateDir + s"/fb/$i")
-      val keptB = spark.read.parquet(stateDir + s"/fb/$i")
-      val ann = Dedup.exactDupAnnotate(keptB, "doc_id", "text")
-        .where(!col("is_dup"))
-      val seen = graft.sources.StateStore.readBefore(spark,
-        stateDir + "/seen", i)
-      val exSurv = ann.join(seen, Seq("content_hash"), "left_anti")
-        .select("doc_id", "text", "toks", "content_hash")
-      // toks persisted at publish time — the prior side is a column scan,
-      // never re-tokenized per batch; both state reads and the band probe
-      // are AS-OF (batch/src_batch < i), the gate's replay-determinism rule
-      val prior = graft.sources.StateStore.readBefore(spark,
-        stateDir + "/store", i)
-      val pairs = Dedup.incrementalLshPairsFrom(
-        spark.table(table).where(col("src_batch") < i),
-        prior.select("doc_id", "toks"),
-        exSurv.select("doc_id", "toks"), "doc_id", "toks",
-        shingleN, minhashK, minhashBands, threshold = 0.7,
-        maxBucket = maxBucket)
-      exSurv
-        .join(pairs.select(col("id_a").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti")
-        .withColumn("shard",
-          (graft.ml.Sampling.hash32(col("doc_id"), "s1") % 8).cast("int"))
-        .select("doc_id", "text", "toks", "shard")
-        .write.mode("overwrite").parquet(stateDir + s"/stage/$i")
-      val surv = spark.read.parquet(stateDir + s"/stage/$i")
-      survivors += surv.count()
-      graft.sources.StateStore.publishBatch(
-        surv.select("doc_id", "text", "toks"), stateDir + "/store", i)
-      graft.sources.StateStore.publishBatch(
-        ann.select("content_hash").distinct()
-          .join(seen, Seq("content_hash"), "left_anti"),
-        stateDir + "/seen", i)
-      Dedup.appendLshIndexIdempotent(surv.select("doc_id", "toks"),
-        "doc_id", "toks", shingleN, minhashK, minhashBands, table, dir,
-        batchId = i, buckets = 32)
-    }
-    survivors
+      graft.sources.StateStore.read(spark, root + "/store").count()
     } finally {
       // the state dirs hold full survivor-corpus text per cell — at 1.5M
       // docs × 3 cells × 2 cpu configs that is multiple GB of /tmp per
       // DocBench run if leaked. Deletion is DEFERRED to the harness (after
       // the cell's timed region): multi-GB recursive deletes are not part
       // of the pipeline under measurement.
-      pendingCleanup ++= Seq(stateDir, dir) ++ Option(benchDir)
+      pendingCleanup += root
     }
   }
 
@@ -261,7 +134,11 @@ object DocBench {
       val pth = new org.apache.hadoop.fs.Path(p)
       pth.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(pth, true)
-    } catch { case _: Throwable => () }
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(
+          s"DOCBENCH cleanup of $p failed: ${e.getClass.getName}: ${e.getMessage}")
+    }
 
   /** Drain [[pendingCleanup]] — called by the harness outside timing. */
   private def drainCleanup(spark: SparkSession): Unit = {
@@ -390,7 +267,7 @@ object DocBench {
         // overlap at 10⁵ scale) BEFORE the LSH probe — the production
         // interplay of the two skew defenses.
         "corpus_e2e_live_full_3batches" -> (() => corpusE2eBatches(spark,
-          docs, 3, tag = "full", fullSuite = true)),
+          docs, 3, tag = "full", trainFrac = 0.9)),
         // BATCH-SIZE SCALING of the full-suite pipeline (r12 verdict ask
         // #5): the SAME train corpus in 6 and 12 arriving batches. s/doc
         // vs batch count reads the per-batch fixed cost (state reads,
@@ -398,9 +275,9 @@ object DocBench {
         // micro-batch sizing lever a production ingest tunes
         // (maxFilesPerTrigger / buffer-then-commit).
         "corpus_e2e_live_full_6batches" -> (() => corpusE2eBatches(spark,
-          docs, 6, tag = "full6", fullSuite = true)),
+          docs, 6, tag = "full6", trainFrac = 0.9)),
         "corpus_e2e_live_full_12batches" -> (() => corpusE2eBatches(spark,
-          docs, 12, tag = "full12", fullSuite = true)),
+          docs, 12, tag = "full12", trainFrac = 0.9)),
         // ADVERSARIAL ARRIVAL ORDER: the ~12.5% template mega-cluster
         // arrives concentrated in the FIRST batch (instead of hash-spread
         // across all three). Batch 1 appends the mega-bucket's ~10⁵ band
@@ -457,8 +334,9 @@ object DocBench {
           val n = run()
           pairCounts += (name -> n)
           Some(name -> (System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          System.err.println(s"DOCBENCH $name FAILED: ${e.getMessage}")
+        } catch { case NonFatal(e) =>
+          System.err.println(
+            s"DOCBENCH $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
           None
         }
         drainCleanup(spark) // multi-GB state dirs, deleted OUTSIDE timing

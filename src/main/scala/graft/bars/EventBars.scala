@@ -33,13 +33,13 @@ object EventBars {
       .where(col("rn0") >= 1)
       .withColumn("bar_id", expr(s"rn0 div $threshold"))
 
-  /** OHLCV over explicit bar ids; close ts = last trade's ts. Fixed-width
-    * two-pass aggregation (see TimeBars.ohlcvTwoPass) — no SortAggregate.
+  /** OHLCV over explicit bar ids; close ts = last trade's ts. One
+    * ObjectHashAggregate pass (see TimeBars.ohlcvAgg).
     * With `keyCols` (per-symbol bar_id sequences restart at 0) the group
     * key is (keys..., bar_id) — bar_id alone would mix symbols.
     */
   def ohlcvByBarId(withIds: DataFrame, keyCols: Seq[String] = Nil): DataFrame =
-    TimeBars.ohlcvTwoPass(withIds, keyCols :+ "bar_id")
+    TimeBars.ohlcvAgg(withIds, keyCols :+ "bar_id")
       .withColumn("bar_ts", col("__lts"))
       .select((keyCols ++ Seq("bar_id", "bar_ts", "open", "high", "low", "close",
         "volume", "trades", "median_trade_size", "vwap")).map(col): _*)
@@ -292,7 +292,7 @@ object EventBars {
     // the complete flag (max(bar_closed)) rides the ONE per-bar OHLCV
     // aggregation as an extra column instead of a second agg + re-join of
     // the same stream (one Exchange instead of three — guide §2.4)
-    TimeBars.ohlcvTwoPass(withIds.where(col("bar_id") >= 0), keys,
+    TimeBars.ohlcvAgg(withIds.where(col("bar_id") >= 0), keys,
         extraAggs = Seq(max(col("bar_closed")).as("__complete")))
       .where(col("__complete"))
       .withColumn("bar_ts", col("__lts"))

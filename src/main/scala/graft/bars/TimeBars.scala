@@ -45,8 +45,8 @@ object TimeBars {
     * rows instead of a second full scan + join of the trade stream
     * (optimization guide §2.4 "remove shuffles outright").
     */
-  private[graft] def ohlcvTwoPass(t: DataFrame, g: Seq[String],
-                                  extraAggs: Seq[Column] = Nil): DataFrame = {
+  private[graft] def ohlcvAgg(t: DataFrame, g: Seq[String],
+                              extraAggs: Seq[Column] = Nil): DataFrame = {
     val gc = g.map(col)
     val aggs = Seq(
       max("ts").as("__lts"),
@@ -83,7 +83,7 @@ object TimeBars {
     * ==vwap quantization contract==
     * `vwap` is the ratio of EXACT integer micro-unit sums: each
     * `price·qty` and `qty` term is quantized to the 1e-6 grid via
-    * `floor(x·1e6 + 0.5)` before summing (see [[ohlcvTwoPass]] — this is
+    * `floor(x·1e6 + 0.5)` before summing (see [[ohlcvAgg]] — this is
     * what makes the value independent of partitioning / addition order,
     * and bit-identical across engines). Consequence for library users:
     * quantities or notionals with genuine sub-1e-6 resolution contribute
@@ -105,7 +105,7 @@ object TimeBars {
     val outCols = partCols.map(col) ++ Seq(col("bar_ts"), col("open"),
       col("high"), col("low"), col("close"), col("volume"), col("trades"),
       col("median_trade_size"), col("vwap"))
-    val agg = ohlcvTwoPass(
+    val agg = ohlcvAgg(
         trades.withColumn("bar_ts", barTs(iv)),
         partCols :+ "bar_ts")
       .select(outCols: _*)
@@ -327,7 +327,7 @@ object TimeBars {
         min(when(col("__cumw") >= col("__totw") * 0.5, col("median_trade_size")))
           .as("median_trade_size"),
         // exact integer micro-unit sums for the same order-independence
-        // reason as ohlcvTwoPass's vwap (floor(x·1e6 + 0.5) — the
+        // reason as ohlcvAgg's vwap (floor(x·1e6 + 0.5) — the
         // engine-neutral quantization op tree), summed in decimal(38,0)
         // so no period's bar count can wrap a long
         (sum(floor(col("vwap") * col("volume") * lit(1e6) + lit(0.5)).cast("decimal(38,0)")).cast("double") /

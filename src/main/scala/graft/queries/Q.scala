@@ -41,7 +41,7 @@ object Q {
     s"CAST(sum(CAST(($expr) AS DECIMAL(18,6))) AS DOUBLE)"
 
   /** Exact integer micro-unit sum as double — ORACLE MIRROR of the
-    * engine's floor(x·1e6 + 0.5) quantization (TimeBars.ohlcvTwoPass
+    * engine's floor(x·1e6 + 0.5) quantization (TimeBars.ohlcvAgg
     * vwap, resample recombination). Unlike a DECIMAL(18,6) cast — whose
     * rounding implementations differ between the engines on knife-edge
     * doubles (Spark: shortest-decimal string; DuckDB: the ·1e6 product)

@@ -34,7 +34,7 @@ object StreamQueries {
     * mid-stream (round-7 advice; same idiom as Dedup.connectedComponents's
     * cc_<uuid> subdirs).
     */
-  private[queries] val runId: String =
+  private[graft] val runId: String =
     java.util.UUID.randomUUID().toString.take(8)
 
   /** Run `body` (a streaming start+drain) with `shuffle.partitions` pinned
@@ -66,13 +66,14 @@ object StreamQueries {
     * with the advisory size; the same setting measured 0.93× on the tiny
     * BATCH query family, which keeps Spark's parallelism-first default —
     * see Conf.engineDefaults). Scale-adaptive: shuffles at or above the
-    * advisory size are untouched.
+    * advisory size are untouched. A constant, not the env knob that sets
+    * the session default: A/B-ing the batch default must not flip the
+    * drains too.
     */
-  private def withBatchCoalesce[T](s: SparkSession)(body: => T): T = {
+  private[queries] def withBatchCoalesce[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
     val old = s.conf.get(key)
-    s.conf.set(key,
-      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
+    s.conf.set(key, "false")
     try body finally s.conf.set(key, old)
   }
 
@@ -107,473 +108,106 @@ object StreamQueries {
     d.setLastModified(modTime)
   }
 
-  // ------------------------------------------------------------------
-  // The FULL-suite live corpus pipeline, shared by streaming_corpus_e2e_full
-  // and its crash-replay twin. State discipline (the last exactly-once hole,
-  // r12 verdict #1): all three state tables publish BATCH-SCOPED —
-  // store/seen through StateStore.publishBatch (overwrite of the batch's
-  // own partition), the band index through appendLshIndexIdempotent
-  // (staged bucketed publish under deterministic b<batch>_ names) — and all
-  // three probe AS-OF (StateStore.readBefore / src_batch < batchId), so a
-  // checkpoint-replayed batch recomputes a bit-identical survivor set and
-  // rewrites identical state over itself. A crash at ANY point between
-  // publishes replays to exactly-once content.
-  // ------------------------------------------------------------------
-
-  /** Day-0 state + source files for the full-suite pipeline: the
-    * PII-augmented corpus is split (train arrives in 3 micro-batches, the
-    * held-out test split is the static decon benchmark), the benchmark
-    * gram table + xx-gram bloom are staged, and the three state tables
-    * start empty (batch=-1 / empty bucketed index with src_batch).
-    * Returns (train schema, bench bloom bytes).
+  /** A `streaming_corpus_*` gate's fixture under tmpdir/`name`: the empty
+    * day-0 state ([[CorpusPipeline.day0]]) and the 3-batch source
+    * (doc_id mod 3, one file per batch). The base gates stream the raw
+    * corpus; `full` streams the train split of the PII-AUGMENTED corpus
+    * (the synthetic docs carry no organic PII — same deterministic
+    * injection as pii_redact) and holds out the test split as the static
+    * decontamination benchmark. Returns (root, front, source schema).
     */
-  private def corpusFullDay0(s: SparkSession, dir: String, name: String,
-                             root: String)
-      : (org.apache.spark.sql.types.StructType, Array[Byte]) = {
-    import DocQueries.{shingleN, minhashK, minhashBands}
-    import graft.text.TextOps
-    val pth = new org.apache.hadoop.fs.Path(root)
-    val fs = pth.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(pth)) fs.delete(pth, true)
-    // the corpus arrives PII-AUGMENTED (the synthetic docs carry no
-    // organic PII — same deterministic injection as pii_redact).
-    // repartitioned: the corpus is one parquet split, and the persisted
-    // frame inherits its partitioning — the bench-side redact + gram
-    // explode below would otherwise run single-task (profiled 1.9 s,
-    // guide §2.5 "one huge unsplittable file")
-    val aug = s.read.parquet(s"$dir/documents.parquet")
-      .repartition(math.max(1, s.sparkContext.defaultParallelism),
-        col("doc_id"))
-      .select(col("doc_id"), PipeQueries.augText.as("text"))
-    // persisted: train feeds 3 source writes, test feeds the bench gram
-    // table + bloom — 5 actions would otherwise re-run the PII
-    // augmentation + split hash per pass
-    val sp = graft.ml.Sampling.splitAssign(aug, "doc_id",
-      DocQueries.sampleSalt, DocQueries.splitFractions)
-      .persist(graft.Conf.storageLevel)
-    val train = sp.where(col("split") === "train").select("doc_id", "text")
-    val test = sp.where(col("split") === "test").select("doc_id", "text")
-    // day-0 static state: the benchmark gram set (over REDACTED bench
-    // text — the probe compares post-redaction token streams on both
-    // sides) and its companion bloom (scan-stage decon pre-filter; bloom
-    // misses are impossible, so the survivor set is bit-identical to the
-    // unfiltered probe)
-    val benchDocs = test
-      .select(col("doc_id"), TextOps.redact(col("text")).as("text"))
-      .withColumn("toks", TextOps.wsTokens(col("text")))
-    graft.dedup.Substring.distinctGramHashes(benchDocs,
-        "doc_id", "toks", PipeQueries.contamN)
-      .select("h").distinct().write.parquet(root + "/bench")
-    val benchBloom = graft.dedup.Substring.gramXxBloom(benchDocs,
-      "toks", PipeQueries.contamN)
-    graft.dedup.Dedup.writeLshIndex(
-      train.limit(0).withColumn("toks", TextOps.wsTokens(col("text"))),
-      "doc_id", "toks", shingleN, minhashK, minhashBands, name,
-      root + "/idx", buckets = 8, srcBatch = Some(-1L))
-    graft.sources.StateStore.publishBatch(
-      train.limit(0).select(md5(col("text")).as("content_hash")),
-      root + "/seen", -1L)
-    graft.sources.StateStore.publishBatch(
-      train.limit(0)
-        .select(col("doc_id"), col("text"), lit(false).as("has_pii"),
-          lit("").as("pred_lang"), lit(0L).as("n_ws_tokens"),
-          lit(0.0).as("quality_score"), lit(0).as("shard"),
-          TextOps.wsTokens(col("text")).as("toks")),
-      root + "/store", -1L)
+  private def corpusGate(s: SparkSession, dir: String, name: String,
+                         full: Boolean)
+      : (String, CorpusPipeline.Front, org.apache.spark.sql.types.StructType) = {
+    val root = new java.io.File(sys.props("java.io.tmpdir"), name)
+      .getAbsolutePath
+    val docs = s.read.parquet(s"$dir/documents.parquet")
+    // persisted: the source splits, day-0 schema probes and (full) the
+    // bench gram table + bloom each re-read it — without it every action
+    // re-runs the PII augmentation + split hash
+    val (train, bench) =
+      if (!full) (docs.select("doc_id", "text").persist(graft.Conf.storageLevel), None)
+      else {
+        // repartitioned: the corpus is one parquet split, and the persisted
+        // frame inherits its partitioning — the bench-side redact + gram
+        // explode would otherwise run single-task (profiled 1.9 s, guide
+        // §2.5 "one huge unsplittable file")
+        val sp = graft.ml.Sampling.splitAssign(
+            docs.repartition(math.max(1, s.sparkContext.defaultParallelism),
+                col("doc_id"))
+              .select(col("doc_id"), PipeQueries.augText.as("text")),
+            "doc_id", DocQueries.sampleSalt, DocQueries.splitFractions)
+          .persist(graft.Conf.storageLevel)
+        def split(n: String) = sp.where(col("split") === n).select("doc_id", "text")
+        (split("train"), Some(split("test")))
+      }
+    val front = CorpusPipeline.day0(s, train, name, root, buckets = 8, bench)
     val t0 = System.currentTimeMillis()
-    writeOneFile(train.where(pmod(col("doc_id"), lit(3)) === 0),
-      root + "/src", "a_b0", t0 - 60000)
-    writeOneFile(train.where(pmod(col("doc_id"), lit(3)) === 1),
-      root + "/src", "b_b1", t0 - 40000)
-    writeOneFile(train.where(pmod(col("doc_id"), lit(3)) === 2),
-      root + "/src", "c_b2", t0 - 20000)
-    (train.schema, benchBloom)
-  }
-
-  /** GC the per-batch replay staging dirs (`root/<sub>/<id>`) for batches
-    * STRICTLY BEFORE `batchId` — called at every batch's entry. The
-    * staging points exist only so a replay of batch N is deterministic
-    * (each is rebuilt by overwrite inside N's own body); entering batch N
-    * proves batch N−1's checkpoint commit is durable, so no batch ≤ N−1
-    * can ever replay and its staging is dead weight. Without this the
-    * pipeline retains ~2-3× the arrival volume FOREVER (r13 verdict #1 —
-    * the storage twin of the state-dir file-count problem
-    * [[graft.sources.StateStore.compact]] solves). Batch N's own staging
-    * (a crashed prior attempt's) is deliberately kept: the replay
-    * overwrites it stage by stage.
-    */
-  private def gcReplayStaging(s: SparkSession, root: String,
-                              subs: Seq[String], batchId: Long): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    subs.foreach { sub =>
-      val p = new org.apache.hadoop.fs.Path(s"$root/$sub")
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p))
-        fs.listStatus(p).filter(_.isDirectory).foreach { d =>
-          val id = scala.util.Try(d.getPath.getName.toLong).toOption
-          if (id.exists(_ < batchId)) fs.delete(d.getPath, true)
-        }
+    Seq("a_b0", "b_b1", "c_b2").zipWithIndex.foreach { case (sub, i) =>
+      writeOneFile(train.where(pmod(col("doc_id"), lit(3)) === i),
+        root + "/src", sub, t0 - 60000 + 20000 * i)
     }
+    (root, front, train.schema)
   }
 
-  /** One micro-batch of the FULL production filter suite: redact at entry
-    * → quality + langid → Gopher repetition → bloom-bounded decon probe →
-    * exact-dedup probe → LSH probe → shard → publish (store, seen, index).
-    * Per-row expression staging points (fbr/fb0/fb/stage) are batch-scoped
-    * overwrites, so the whole body is replay-deterministic given the AS-OF
-    * state reads; committed batches' staging is GC'd at entry
-    * ([[gcReplayStaging]]). `crashAtBatch` injects one crash between the
-    * seen publish and the index publish — the crash-replay gate's kill
-    * point.
+  /** Drain with a crash injected at `crashAtBatch` (between its seen and
+    * index publishes), require that it fired, then restart on the same
+    * checkpoint — the crashed batch replays in full, then the rest runs.
     */
-  private def corpusFullOnBatch(s: SparkSession, name: String, root: String,
-                                benchBloom: Array[Byte],
-                                crashAtBatch: Long = -1L)(
-      b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-      batchId: Long): Unit = {
-    import DocQueries.{shingleN, minhashK, minhashBands}
-    import graft.text.TextOps
-    gcReplayStaging(s, root, Seq("fb0", "fb", "stage"), batchId)
-    // 0-2. PII redaction → quality + langid → Gopher repetition, ONE
-    // staged write (r15; was two: fbr then fb0). Two things changed, both
-    // guide §2:
-    //  - the micro-batch arrives as ONE file → one scan partition, so the
-    //    whole regex/HOF chain ran as a single task with 31 cores idle
-    //    (profiled: 2.1 s + 1.6 s single-task stages per batch). An
-    //    explicit deterministic repartition on doc_id spreads it; the
-    //    shuffled payload is just the batch's text — cheap vs the per-row
-    //    work it parallelizes (same rationale as lshBandRows).
-    //  - redact(raw) must not INLINE into the downstream quality/langid/
-    //    HOF expressions (no codegen subexpression elimination there —
-    //    the 3-regex scrub would re-run ~6-8x per row). The old code
-    //    paid a staging write+read (fbr) for that barrier; an EXCHANGE is
-    //    the same barrier for free: projections do not collapse across a
-    //    repartition, so `text` crosses the second shuffle materialized.
-    // has_pii = "redaction changed the text".
-    // the `|| __nd < 0` guards (always false: monotonically_increasing_id
-    // is non-negative; the column is dropped before the write) make each
-    // filter condition non-deterministic so PushDownPredicates cannot
-    // SUBSTITUTE the scoring tree through the projections and exchanges
-    // into the single-partition scan — without them the whole scrub/score
-    // tree lands in a Filter on the one scan task (profiled: 4.5 s
-    // single-task, 31 cores idle) and re-evaluates in the projection
-    // above (guide §4.4, applied at expression level; plan-verified:
-    // each expression now evaluates exactly once, post-exchange).
-    val par = math.max(1, s.sparkContext.defaultParallelism)
-    val red = b.repartition(par, col("doc_id"))
-      .select(col("doc_id"),
-        TextOps.redact(col("text")).as("text"),
-        (TextOps.redact(col("text")) =!= col("text")).as("has_pii"))
-      .repartition(par, col("doc_id"))
-    val scored = red.select(
-      Seq(col("doc_id"), col("text"), col("has_pii")) ++
-        TextOps.qualityColumns(col("text")) ++
-        Seq(TextOps.langIdColumns(col("text")).last,
-          monotonically_increasing_id().as("__nd")): _*)
-    scored
-      .where(col("pred_lang") === "en" && col("quality_score") >= 0.5 ||
-        col("__nd") < 0)
-      .select("doc_id", "text", "has_pii", "pred_lang", "n_ws_tokens",
-        "quality_score")
-      .withColumn("toks", TextOps.wsTokens(col("text")))
-      .withColumn("__nd", monotonically_increasing_id())
-      .where(TextOps.keepRepetition(col("text"), col("toks")) ||
-        col("__nd") < 0)
-      .drop("__nd")
-      .write.mode("overwrite").parquet(root + s"/fb0/$batchId")
-    // staged: the decon probe's contaminated-id set and the anti-join's
-    // left side both reference this frame — an unpersisted subtree would
-    // re-execute the whole scrub/score chain per appearance
-    val kept2 = s.read.parquet(root + s"/fb0/$batchId")
-    // 3. decontamination probe against the static benchmark gram set,
-    // BLOOM-BOUNDED: only possible-hit rows pay the gram explode + exact
-    // semi-join — both reading the STAGED columnar toks.
-    val bench = s.read.parquet(root + "/bench")
-    val maybe = kept2.where(graft.dedup.Substring.mightContainGram(
-      col("toks"), PipeQueries.contamN, benchBloom))
-    val contam = graft.dedup.Substring.distinctGramHashes(
-        maybe, "doc_id", "toks", PipeQueries.contamN)
-      .join(bench, Seq("h"), "left_semi")
-      .select("doc_id").distinct()
-    // the exact-dedup annotation rides the decon-stage write (r15, guide
-    // §1.2): `ann` is consumed by both the survivor chain and the seen
-    // publish — annotating at staging time computes the keep-first window
-    // once and both consumers read it back columnar (deterministic
-    // function of the batch, so replay semantics are unchanged)
-    graft.dedup.Dedup.exactDupAnnotate(
-        kept2.join(contam, Seq("doc_id"), "left_anti"), "doc_id", "text")
-      .write.mode("overwrite").parquet(root + s"/fb/$batchId")
-    // 4. exact-dedup probe: keep-first inside the batch (the staged
-    // annotation), then drop any hash seen in an EARLIER batch — the
-    // AS-OF read is what keeps a replayed batch from seeing its own
-    // crash-published hashes (which would empty its survivor set)
-    val ann = s.read.parquet(root + s"/fb/$batchId")
-    val seen = graft.sources.StateStore.readBefore(s, root + "/seen", batchId)
-    val exSurv = ann.where(!col("is_dup"))
-      .join(seen, Seq("content_hash"), "left_anti")
-    // 5. LSH probe against the survivors-so-far index, AS-OF via the
-    // src_batch scan predicate (a replayed batch matching its own bands
-    // would self-jaccard at 1.0 and drop every doc). The store persists
-    // toks, so the prior side is a column scan — never re-tokenized.
+  private def corpusCrashReplay(s: SparkSession, name: String, root: String,
+                                schema: org.apache.spark.sql.types.StructType,
+                                front: CorpusPipeline.Front,
+                                crashAtBatch: Long,
+                                compactAtBatch: Long = -1L): Unit = {
+    val crashed =
+      try {
+        CorpusPipeline.drain(s, name, root, schema, front,
+          compactAtBatch = compactAtBatch, crashAtBatch = crashAtBatch)
+        false
+      } catch {
+        case _: org.apache.spark.sql.streaming.StreamingQueryException => true
+      }
+    require(crashed, s"the injected crash at batch $crashAtBatch (between " +
+      "the seen publish and the index publish) did not fire")
+    CorpusPipeline.drain(s, name, root, schema, front,
+      compactAtBatch = compactAtBatch)
+  }
+
+  /** Exactly-once post-conditions a crash-replayed corpus drain must leave
+    * in the state tables the oracle cannot see: no duplicated store doc,
+    * exactly `minhashBands` index rows per survivor and none for any other
+    * doc, no duplicated seen hash.
+    */
+  private def requireExactlyOnceState(s: SparkSession, name: String,
+                                      root: String): Unit = {
+    val store = graft.sources.StateStore.read(s, root + "/store")
+    val nDocs = store.count()
+    require(store.select("doc_id").distinct().count() == nDocs,
+      "crash replay duplicated store rows")
     s.catalog.refreshTable(name)
-    val prior = graft.sources.StateStore.readBefore(s, root + "/store", batchId)
-    val pairs = graft.dedup.Dedup.incrementalLshPairsFrom(
-      s.table(name).where(col("src_batch") < batchId),
-      prior.select("doc_id", "toks"),
-      exSurv.select("doc_id", "toks"), "doc_id", "toks",
-      shingleN, minhashK, minhashBands, DocQueries.jaccThreshold)
-    // 6. keep/drop + hash-gated shard, STAGED to a batch-scoped path
-    // before any state publish (the survivor plan reads the state dirs
-    // this batch publishes to)
-    exSurv
-      .join(pairs.select(col("id_a").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      .withColumn("shard",
-        (graft.ml.Sampling.hash32(col("doc_id"), LmQueries.shardSalt)
-          % LmQueries.nShards).cast("int"))
-      .write.mode("overwrite").parquet(root + s"/stage/$batchId")
-    val surv = s.read.parquet(root + s"/stage/$batchId")
-    // 7. publish state, each batch-scoped and replay-idempotent: store
-    // (toks persisted for the next batch's LSH prior), seen hashes, bands
-    graft.sources.StateStore.publishBatch(
-      surv.select("doc_id", "text", "has_pii", "pred_lang",
-        "n_ws_tokens", "quality_score", "shard", "toks"),
-      root + "/store", batchId)
-    // publish only the batch's UNSEEN hashes (anti-join against the same
-    // as-of read the probe used): seen then grows with the DISTINCT
-    // corpus, not with arrivals — the state-size property a 100 TB ingest
-    // needs — and "every hash has exactly one publishing batch" becomes a
-    // true global invariant the crash-replay gate can assert.
-    graft.sources.StateStore.publishBatch(
-      ann.select("content_hash").distinct()
-        .join(seen, Seq("content_hash"), "left_anti"),
-      root + "/seen", batchId)
-    if (batchId == crashAtBatch)
-      throw new RuntimeException(
-        "injected crash between the seen publish and the index publish")
-    graft.dedup.Dedup.appendLshIndexIdempotent(surv.select("doc_id", "toks"),
-      "doc_id", "toks", shingleN, minhashK, minhashBands, name,
-      root + "/idx", batchId, buckets = 8)
+    val idxByDoc = s.table(name).groupBy("base_id")
+      .agg(count(lit(1)).as("n"))
+    require(idxByDoc.where(col("n") =!= DocQueries.minhashBands).count() == 0,
+      "crash replay duplicated or dropped band rows")
+    require(idxByDoc.count() == nDocs &&
+      idxByDoc.join(store.select(col("doc_id").as("base_id")),
+        Seq("base_id"), "left_anti").count() == 0,
+      "index doc set diverged from the store after crash replay")
+    val seen = graft.sources.StateStore.read(s, root + "/seen")
+    require(seen.count() == seen.distinct().count(),
+      "crash replay duplicated seen hashes")
   }
 
-  /** Drain the full-suite pipeline's 3-batch source to completion. */
-  private def corpusFullDrain(s: SparkSession, name: String, root: String,
-                              schema: org.apache.spark.sql.types.StructType,
-                              benchBloom: Array[Byte],
-                              crashAtBatch: Long = -1L): Unit = {
-    // NO withStateParts here: the pipeline has no Spark state store (its
-    // state is the custom StateStore dirs), and its per-batch bodies are
-    // CPU-heavy expression work that needs the cores (see corpusFullOnBatch);
-    // the delta-sized per-batch shuffles DO coalesce to their bytes
-    withBatchCoalesce(s) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(root + "/src/*")
-        .writeStream
-        .foreachBatch(corpusFullOnBatch(s, name, root, benchBloom,
-          crashAtBatch) _)
-        .option("checkpointLocation", root + "/chk")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-  }
-
-  /** The full-suite pipeline's gate output (shared oracle columns). */
-  private def corpusFullOut(s: SparkSession, root: String): DataFrame =
-    graft.sources.StateStore.read(s, root + "/store")
-      .select(col("doc_id"), col("shard"), col("pred_lang"),
-        col("n_ws_tokens"), r6(col("quality_score")).as("quality_score"),
-        col("has_pii"), md5(col("text")).as("redacted_md5"))
-
-  // ------------------------------------------------------------------
-  // The BASE live corpus pipeline (no redaction/repetition/decon stages),
-  // shared by streaming_corpus_e2e and the mid-drain state-compaction
-  // gate. Same exactly-once state discipline as the full suite.
-  // ------------------------------------------------------------------
-
-  /** Day-0 empty state + the 3-batch source for the base pipeline. */
-  private def corpusBaseDay0(s: SparkSession, dir: String, name: String,
-                             root: String)
-      : org.apache.spark.sql.types.StructType = {
-    import DocQueries.{shingleN, minhashK, minhashBands}
-    import graft.text.TextOps
-    val pth = new org.apache.hadoop.fs.Path(root)
-    val fs = pth.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(pth)) fs.delete(pth, true)
-    // persisted: 3 source-split writes + day-0 schema probes re-read it
-    val docsAll = s.read.parquet(s"$dir/documents.parquet")
-      .select("doc_id", "text")
-      .persist(graft.Conf.storageLevel)
-    // day-0 state: an EMPTY stored band index (batch 1 probes nothing,
-    // publishes first), an empty seen-hash set, an empty survivors store
-    graft.dedup.Dedup.writeLshIndex(
-      docsAll.limit(0).withColumn("toks", TextOps.wsTokens(col("text"))),
-      "doc_id", "toks", shingleN, minhashK, minhashBands, name,
-      root + "/idx", buckets = 8, srcBatch = Some(-1L))
-    graft.sources.StateStore.publishBatch(
-      docsAll.limit(0).select(md5(col("text")).as("content_hash")),
-      root + "/seen", -1L)
-    graft.sources.StateStore.publishBatch(
-      docsAll.limit(0)
-        .select(col("doc_id"), col("text"), lit("").as("pred_lang"),
-          lit(0L).as("n_ws_tokens"), lit(0.0).as("quality_score"),
-          lit(0).as("shard"),
-          TextOps.wsTokens(col("text")).as("toks")),
-      root + "/store", -1L)
-    val t0 = System.currentTimeMillis()
-    writeOneFile(docsAll.where(pmod(col("doc_id"), lit(3)) === 0),
-      root + "/src", "a_b0", t0 - 60000)
-    writeOneFile(docsAll.where(pmod(col("doc_id"), lit(3)) === 1),
-      root + "/src", "b_b1", t0 - 40000)
-    writeOneFile(docsAll.where(pmod(col("doc_id"), lit(3)) === 2),
-      root + "/src", "c_b2", t0 - 20000)
-    docsAll.schema
-  }
-
-  /** One micro-batch of the base ingest chain: quality + langid → exact
-    * probe → LSH probe → shard → publish (store, seen, index), with
-    * batch-scoped publishes and AS-OF probes like the full suite.
-    * `compactAtBatch` runs the STATE COMPACTION lifecycle at that batch's
-    * entry — folding every committed batch partition of seen/store into
-    * one generation ([[graft.sources.StateStore.compact]]) before the
-    * batch's own probes read them: the file-count bound a long-running
-    * ingest needs, exercised mid-drain where it could corrupt survivors
-    * if the fold were not content-preserving or raced the open batch.
+  /** Compaction post-condition: seen and store each hold the folded
+    * generation (`batch=-2`) plus at most the open batch's partition.
     */
-  private def corpusBaseOnBatch(s: SparkSession, name: String, root: String,
-                                compactAtBatch: Long = -1L,
-                                crashAtBatch: Long = -1L,
-                                foldIndexAtBatch: Long = -1L)(
-      b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-      batchId: Long): Unit = {
-    import DocQueries.{shingleN, minhashK, minhashBands}
-    import graft.text.TextOps
-    gcReplayStaging(s, root, Seq("fb", "stage"), batchId)
-    if (batchId == compactAtBatch) {
-      // fold committed batches only (ids ≤ batchId-1 — their checkpoint
-      // commits are durable, so none can ever replay into the fold).
-      // Idempotent under replay: a crashed batch that already folded
-      // finds ONE generation partition ≤ batchId-1 and no-ops (< minDirs)
-      graft.sources.StateStore.compact(s, root + "/seen", batchId - 1)
-      graft.sources.StateStore.compact(s, root + "/store", batchId - 1)
+  private def requireStateFolded(root: String): Unit =
+    Seq("/seen", "/store").foreach { st =>
+      val dirs = new java.io.File(root + st).listFiles()
+        .filter(_.getName.startsWith("batch=")).map(_.getName).sorted
+      require(dirs.length <= 2 && dirs.head == "batch=-2",
+        s"state $st is not folded: ${dirs.mkString(",")}")
     }
-    if (batchId == foldIndexAtBatch)
-      // committed-batch fold of the stored band index: only b<id>_ files
-      // with id ≤ batchId-1 (plus day-0/previous generations) — none can
-      // ever replay, so the fold can never race a replayed publish's
-      // delete-by-prefix sweep
-      graft.dedup.Dedup.foldLshIndexBatches(s, name, root + "/idx",
-        batchId - 1, buckets = 8, minFiles = 2)
-    // 1. cheap filters first: quality score + language id — then STAGE
-    // the filtered batch to a batch-scoped file and read it back (its
-    // subtree appears several times in one plan; an unpersisted subtree
-    // re-executes per appearance — measured ~4 filter-chain evaluations
-    // per batch). Overwrite mode: a crash-looped batch re-stages
-    // idempotently. The exact-dedup annotation (content hash + keep-first
-    // window) and the tokenization RIDE THE SAME WRITE (r15, guide §1.2):
-    // `ann` is consumed twice per batch (survivor chain + the seen
-    // publish) and `toks` three times (LSH bands, jaccard verify, the
-    // survivor stage) — annotating at staging time computes the window
-    // and wsTokens once; every consumer reads them back columnar. Both
-    // are deterministic functions of the batch, so replay semantics are
-    // unchanged.
-    // the batch arrives as ONE file → one scan partition; an explicit
-    // deterministic repartition on doc_id spreads the per-row regex/HOF
-    // scoring over the cores (profiled: ~1.6 s single-task stage per
-    // batch otherwise — guide §2.5 "one huge unsplittable file"). toks
-    // is computed BEFORE the keep-first window so the tokenization runs
-    // in the parallel pre-shuffle projection, not on the window's
-    // (possibly coalesced) output.
-    // `|| __nd < 0` guard (always false; the explicit select drops the
-    // column): pins the quality/lang filter ABOVE this projection —
-    // otherwise PushDownPredicates substitutes the whole scoring tree
-    // into a Filter on the one scan task below the exchange and the
-    // projection re-evaluates it (see corpusFullOnBatch)
-    val par = math.max(1, s.sparkContext.defaultParallelism)
-    val scored = b.repartition(par, col("doc_id")).select(
-      Seq(col("doc_id"), col("text")) ++ TextOps.qualityColumns(col("text")) ++
-        Seq(TextOps.langIdColumns(col("text")).last,
-          monotonically_increasing_id().as("__nd")): _*)
-    graft.dedup.Dedup.exactDupAnnotate(
-        scored
-          .where(col("pred_lang") === "en" && col("quality_score") >= 0.5 ||
-            col("__nd") < 0)
-          .select("doc_id", "text", "pred_lang", "n_ws_tokens",
-            "quality_score")
-          .withColumn("toks", TextOps.wsTokens(col("text"))),
-        "doc_id", "text")
-      .write.mode("overwrite").parquet(root + s"/fb/$batchId")
-    // 2. exact-dedup probe: keep-first inside the batch (the staged
-    // annotation), then drop any hash seen in an EARLIER batch (AS-OF
-    // read — a replayed batch must not see its own crash-published hashes)
-    val ann = s.read.parquet(root + s"/fb/$batchId")
-    val seen = graft.sources.StateStore.readBefore(s, root + "/seen", batchId)
-    val exSurv = ann.where(!col("is_dup"))
-      .join(seen, Seq("content_hash"), "left_anti")
-    // 3. LSH probe against the survivors-so-far index (bands from the
-    // stored bucketed table, AS-OF via src_batch; jaccard verify reads
-    // only candidate docs — the store persists toks, never re-tokenized)
-    s.catalog.refreshTable(name)
-    val prior = graft.sources.StateStore.readBefore(s, root + "/store", batchId)
-    val pairs = graft.dedup.Dedup.incrementalLshPairsFrom(
-      s.table(name).where(col("src_batch") < batchId),
-      prior.select("doc_id", "toks"),
-      exSurv.select("doc_id", "toks"), "doc_id", "toks",
-      shingleN, minhashK, minhashBands, DocQueries.jaccThreshold)
-    // 4. keep/drop + hash-gated shard assignment, STAGED to a
-    // batch-scoped path before any state publish (the survivor plan
-    // reads the state dirs this batch publishes to; a persist() here
-    // silently recomputes against the batch's OWN published hashes)
-    exSurv
-      .join(pairs.select(col("id_a").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      .withColumn("shard",
-        (graft.ml.Sampling.hash32(col("doc_id"), LmQueries.shardSalt)
-          % LmQueries.nShards).cast("int"))
-      .write.mode("overwrite").parquet(root + s"/stage/$batchId")
-    val surv = s.read.parquet(root + s"/stage/$batchId")
-    // 5. publish state, batch-scoped and replay-idempotent
-    graft.sources.StateStore.publishBatch(
-      surv.select("doc_id", "text", "pred_lang", "n_ws_tokens",
-        "quality_score", "shard", "toks"),
-      root + "/store", batchId)
-    graft.sources.StateStore.publishBatch(
-      ann.select("content_hash").distinct()
-        .join(seen, Seq("content_hash"), "left_anti"),
-      root + "/seen", batchId)
-    if (batchId == crashAtBatch)
-      throw new RuntimeException(
-        "injected crash between the seen publish and the index publish")
-    graft.dedup.Dedup.appendLshIndexIdempotent(surv.select("doc_id", "toks"),
-      "doc_id", "toks", shingleN, minhashK, minhashBands, name,
-      root + "/idx", batchId, buckets = 8)
-  }
-
-  /** Drain the base pipeline's 3-batch source to completion. */
-  private def corpusBaseDrain(s: SparkSession, name: String, root: String,
-                              schema: org.apache.spark.sql.types.StructType,
-                              compactAtBatch: Long = -1L,
-                              crashAtBatch: Long = -1L,
-                              foldIndexAtBatch: Long = -1L): Unit = {
-    // no withStateParts: foreachBatch pipeline, no Spark state store —
-    // the per-batch bodies are CPU-heavy and need the cores; the
-    // delta-sized per-batch shuffles DO coalesce to their bytes
-    withBatchCoalesce(s) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(root + "/src/*")
-        .writeStream
-        .foreachBatch(corpusBaseOnBatch(s, name, root, compactAtBatch,
-          crashAtBatch, foldIndexAtBatch) _)
-        .option("checkpointLocation", root + "/chk")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-  }
-
-  /** The base pipeline's gate output (shared oracle columns). */
-  private def corpusBaseOut(s: SparkSession, root: String): DataFrame =
-    graft.sources.StateStore.read(s, root + "/store")
-      .select(col("doc_id"), col("shard"), col("pred_lang"),
-        col("n_ws_tokens"), r6(col("quality_score")).as("quality_score"))
 
   /** Canonical trades written to a fresh temp dir as (data, sentinel-1,
     * sentinel-2) parquet files with pinned modification times, returned
@@ -1496,10 +1130,8 @@ object StreamQueries {
     // KEPT corpus, and every append is an O(|batch|) file append.
     "streaming_corpus_e2e" -> ((s, dir) => {
       val name = s"graft_gate_sce2e_$runId"
-      val root = new java.io.File(sys.props("java.io.tmpdir"), name)
-        .getAbsolutePath
-      val schema = corpusBaseDay0(s, dir, name, root)
-      corpusBaseDrain(s, name, root, schema)
+      val (root, front, schema) = corpusGate(s, dir, name, full = false)
+      CorpusPipeline.drain(s, name, root, schema, front)
       // replay idempotence, the crash-loop property: a fresh query start
       // on the same source + checkpoint after the full drain must invoke
       // foreachBatch for NOTHING — the offset log covers every file, so
@@ -1511,12 +1143,12 @@ object StreamQueries {
             col("n_ws_tokens")).cast("decimal(38,0)")).as("h"))
         .head()
       val before = fp()
-      corpusBaseDrain(s, name, root, schema)
+      CorpusPipeline.drain(s, name, root, schema, front)
       val after = fp()
       require(before == after,
         s"corpus pipeline replay mutated the store (before=$before, " +
           s"after=$after) — exactly-once across a restart is broken")
-      corpusBaseOut(s, root)
+      CorpusPipeline.out(s, root, front)
     }),
 
     // MID-DRAIN STATE COMPACTION of the live pipeline — the file-count
@@ -1533,17 +1165,10 @@ object StreamQueries {
     // (generation + the open batch), with file counts bounded.
     "streaming_corpus_state_compact" -> ((s, dir) => {
       val name = s"graft_gate_sce2sc_$runId"
-      val root = new java.io.File(sys.props("java.io.tmpdir"), name)
-        .getAbsolutePath
-      val schema = corpusBaseDay0(s, dir, name, root)
-      corpusBaseDrain(s, name, root, schema, compactAtBatch = 2L)
-      Seq("/seen", "/store").foreach { st =>
-        val dirs = new java.io.File(root + st).listFiles()
-          .filter(_.getName.startsWith("batch=")).map(_.getName).sorted
-        require(dirs.length <= 2 && dirs.head == "batch=-2",
-          s"state compaction did not fold $st: ${dirs.mkString(",")}")
-      }
-      corpusBaseOut(s, root)
+      val (root, front, schema) = corpusGate(s, dir, name, full = false)
+      CorpusPipeline.drain(s, name, root, schema, front, compactAtBatch = 2L)
+      requireStateFolded(root)
+      CorpusPipeline.out(s, root, front)
     }),
 
     // MID-DRAIN COMMITTED-BATCH FOLD of the stored LSH band index — the
@@ -1560,10 +1185,8 @@ object StreamQueries {
     // physically happened AND the open batch's own publish survived it.
     "streaming_corpus_index_fold" -> ((s, dir) => {
       val name = s"graft_gate_sceix_$runId"
-      val root = new java.io.File(sys.props("java.io.tmpdir"), name)
-        .getAbsolutePath
-      val schema = corpusBaseDay0(s, dir, name, root)
-      corpusBaseDrain(s, name, root, schema, foldIndexAtBatch = 2L)
+      val (root, front, schema) = corpusGate(s, dir, name, full = false)
+      CorpusPipeline.drain(s, name, root, schema, front, foldIndexAtBatch = 2L)
       val idxNames = new java.io.File(root + "/idx").listFiles()
         .filter(_.getName.endsWith(".parquet")).map(_.getName)
       require(!idxNames.exists(n => n.startsWith("b0_") || n.startsWith("b1_")),
@@ -1572,7 +1195,7 @@ object StreamQueries {
         "no generation files after the index fold")
       require(idxNames.exists(_.startsWith("b2_")),
         "the open batch's own publish vanished in the fold")
-      corpusBaseOut(s, root)
+      CorpusPipeline.out(s, root, front)
     }),
 
     // STATE COMPACTION × CRASH REPLAY, composed (r13 verdict #5: each was
@@ -1585,46 +1208,16 @@ object StreamQueries {
     // the fold hook, which must no-op on a lone generation) and the final
     // corpus must hash-match the uninterrupted base oracle. Engine-side:
     // the state dirs stay folded, no store/seen duplicates, exactly
-    // `bands` index rows per survivor.
+    // `bands` index rows per survivor and none for non-survivors.
     "streaming_corpus_compact_crash_replay" -> ((s, dir) => {
-      import DocQueries.minhashBands
       val name = s"graft_gate_sccr_$runId"
-      val root = new java.io.File(sys.props("java.io.tmpdir"), name)
-        .getAbsolutePath
-      val schema = corpusBaseDay0(s, dir, name, root)
-      val crashed =
-        try { corpusBaseDrain(s, name, root, schema, compactAtBatch = 2L,
-          crashAtBatch = 2L); false }
-        catch {
-          case _: org.apache.spark.sql.streaming.StreamingQueryException =>
-            true
-        }
-      require(crashed, "the injected crash after the compacted batch's " +
-        "seen publish did not fire")
-      corpusBaseDrain(s, name, root, schema, compactAtBatch = 2L)
-      Seq("/seen", "/store").foreach { st =>
-        val dirs = new java.io.File(root + st).listFiles()
-          .filter(_.getName.startsWith("batch=")).map(_.getName).sorted
-        require(dirs.length <= 2 && dirs.head == "batch=-2",
-          s"replay un-folded $st: ${dirs.mkString(",")}")
-      }
-      val store = graft.sources.StateStore.read(s, root + "/store")
-      val nDocs = store.count()
-      require(store.select("doc_id").distinct().count() == nDocs,
-        "compact+crash replay duplicated store rows")
-      s.catalog.refreshTable(name)
-      val idxByDoc = s.table(name).groupBy("base_id")
-        .agg(count(lit(1)).as("n"))
-      require(idxByDoc.where(col("n") =!= minhashBands).count() == 0,
-        "compact+crash replay duplicated or dropped band rows")
-      require(idxByDoc.count() == nDocs,
-        "index doc set diverged from the store after compact+crash replay")
-      val seen = graft.sources.StateStore.read(s, root + "/seen")
-      require(seen.count() == seen.distinct().count(),
-        "compact+crash replay duplicated seen hashes")
-      corpusBaseOut(s, root)
+      val (root, front, schema) = corpusGate(s, dir, name, full = false)
+      corpusCrashReplay(s, name, root, schema, front, crashAtBatch = 2L,
+        compactAtBatch = 2L)
+      requireStateFolded(root)
+      requireExactlyOnceState(s, name, root)
+      CorpusPipeline.out(s, root, front)
     }),
-
 
     // THE LIVE DOCUMENT PIPELINE, FULL PRODUCTION FILTER SUITE — extends
     // streaming_corpus_e2e with the three batch-only stages a real ingest
@@ -1648,22 +1241,19 @@ object StreamQueries {
     // re-tokenized per batch).
     "streaming_corpus_e2e_full" -> ((s, dir) => {
       val name = s"graft_gate_sce2f_$runId"
-      val root = new java.io.File(sys.props("java.io.tmpdir"), name)
-        .getAbsolutePath
-      val (schema, benchBloom) = corpusFullDay0(s, dir, name, root)
-      corpusFullDrain(s, name, root, schema, benchBloom)
+      val (root, front, schema) = corpusGate(s, dir, name, full = true)
+      CorpusPipeline.drain(s, name, root, schema, front)
       // replay-staging GC bound (r13 verdict #1): the per-batch staging
-      // points (fb0/fb/stage; fbr folded into fb0's write in r15) retain
-      // ~2-3× arrival volume if never reclaimed; gcReplayStaging at each
-      // batch entry must leave at most the LAST batch's dirs after the
-      // drain
+      // points (fb0/fb/stage) retain ~2-3× arrival volume if never
+      // reclaimed; the GC at each batch entry must leave at most the LAST
+      // batch's dirs after the drain
       Seq("fb0", "fb", "stage").foreach { sub =>
         val dirs = new java.io.File(s"$root/$sub").listFiles()
           .filter(_.isDirectory).map(_.getName)
         require(dirs.length <= 1,
           s"replay staging $sub not GC'd: ${dirs.mkString(",")}")
       }
-      corpusFullOut(s, root)
+      CorpusPipeline.out(s, root, front)
     }),
 
     // MID-BATCH CRASH REPLAY of the full-suite live pipeline — the last
@@ -1683,39 +1273,11 @@ object StreamQueries {
     // see: no duplicated store doc, exactly `bands` index rows per
     // survivor and none for non-survivors, no duplicated seen hash.
     "streaming_corpus_e2e_crash_replay" -> ((s, dir) => {
-      import DocQueries.minhashBands
       val name = s"graft_gate_sce2cr_$runId"
-      val root = new java.io.File(sys.props("java.io.tmpdir"), name)
-        .getAbsolutePath
-      val (schema, benchBloom) = corpusFullDay0(s, dir, name, root)
-      val crashed =
-        try { corpusFullDrain(s, name, root, schema, benchBloom,
-          crashAtBatch = 1L); false }
-        catch {
-          case _: org.apache.spark.sql.streaming.StreamingQueryException =>
-            true
-        }
-      require(crashed, "the injected mid-batch crash (between the seen " +
-        "publish and the index publish) did not fire")
-      // restart on the same checkpoint: batch 1 replays, then batch 2
-      corpusFullDrain(s, name, root, schema, benchBloom)
-      val store = graft.sources.StateStore.read(s, root + "/store")
-      val nDocs = store.count()
-      require(store.select("doc_id").distinct().count() == nDocs,
-        "crash replay duplicated store rows")
-      s.catalog.refreshTable(name)
-      val idxByDoc = s.table(name).groupBy("base_id")
-        .agg(count(lit(1)).as("n"))
-      require(idxByDoc.where(col("n") =!= minhashBands).count() == 0,
-        "crash replay duplicated or dropped band rows")
-      require(idxByDoc.count() == nDocs &&
-        idxByDoc.join(store.select(col("doc_id").as("base_id")),
-          Seq("base_id"), "left_anti").count() == 0,
-        "index doc set diverged from the store after crash replay")
-      val seen = graft.sources.StateStore.read(s, root + "/seen")
-      require(seen.count() == seen.distinct().count(),
-        "crash replay duplicated seen hashes")
-      corpusFullOut(s, root)
+      val (root, front, schema) = corpusGate(s, dir, name, full = true)
+      corpusCrashReplay(s, name, root, schema, front, crashAtBatch = 1L)
+      requireExactlyOnceState(s, name, root)
+      CorpusPipeline.out(s, root, front)
     }),
     // OUT-OF-ORDER arrival through the BUFFERED directional machine: the
     // late half of the trades arrives a whole micro-batch BEFORE the early

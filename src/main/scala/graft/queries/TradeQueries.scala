@@ -51,7 +51,7 @@ object TradeQueries {
     // Per-symbol daily OHLCV bars WITH empty-bar fill: the keyed variant of
     // the signature aggregation — per-key grid, per-key forward fill, all
     // shuffle-parallel (§2.4 at the 100 TB layout). vwap RESTORED in
-    // round 9: ohlcvTwoPass sums exact integer micro-units through the
+    // round 9: ohlcvAgg sums exact integer micro-units through the
     // engine-neutral floor(x·1e6 + 0.5) op tree now, so the (symbol, day)
     // rounding tie that forced its omission — and the sf0.1
     // streamed-tick-bars tie that resurfaced the class — are gone at the
@@ -134,7 +134,7 @@ object TradeQueries {
 
     // Keyed resample: per-symbol daily bars re-binned to 7-day periods —
     // windows and groupBy on (symbol, rs_ts), shuffle-parallel across
-    // symbols AND periods. vwap RESTORED in round 9: ohlcvTwoPass and
+    // symbols AND periods. vwap RESTORED in round 9: ohlcvAgg and
     // resample sum exact integer micro-units through the engine-neutral
     // floor(x·1e6 + 0.5) op tree now, so the (symbol, day) rounding tie
     // that forced its omission is gone at the root.

@@ -62,7 +62,7 @@ object StreamingBars {
         max_by(col("price"), struct(col("ts"), col("id"))).as("close"),
         sum("qty").as("volume"),
         count(lit(1)).as("trades"),
-        // exact integer micro-unit vwap — the batch ohlcvTwoPass op tree
+        // exact integer micro-unit vwap — the batch ohlcvAgg op tree
         // verbatim, so batch/stream parity is bit-exact and order-free
         (sum(floor(col("price") * col("qty") * lit(1e6) + lit(0.5))).cast("double") /
           sum(floor(col("qty") * lit(1e6) + lit(0.5))).cast("double")).as("vwap"))
@@ -175,7 +175,7 @@ object StreamingBars {
                   BarState(r.ts, r.id, r.price, r.ts, r.id, r.price,
                     r.price, r.price, r.qty, 1L, pqU(r), qU(r))
                 else {
-                  // (ts, id) tie-break, exactly the batch two-pass semantics
+                  // (ts, id) tie-break, exactly the batch ohlcvAgg semantics
                   val isOpen = r.ts < s.openTs || (r.ts == s.openTs && r.id < s.openId)
                   val isClose = r.ts > s.closeTs || (r.ts == s.closeTs && r.id > s.closeId)
                   BarState(

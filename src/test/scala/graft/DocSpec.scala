@@ -694,4 +694,33 @@ class DocSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(d.toSeq == Seq((0L, 0L)))
   }
+
+  test("streaming corpus gates: every hook and crash variant reproduces its " +
+      "uninterrupted pipeline's rows") {
+    // the six gates drive one pipeline body; each group shares one DuckDB
+    // oracle, so compaction, index folds and crash replays must leave
+    // exactly the plain drain's survivor rows
+    val dir = "/root/testdata/sf0.001"
+    assume(new java.io.File(s"$dir/documents.parquet").exists())
+    def rows(q: String): Seq[String] =
+      SparkEntry.queries(q)(spark, dir).collect().map(_.toString).sorted.toSeq
+    try {
+      Seq(
+        Seq("streaming_corpus_e2e", "streaming_corpus_state_compact",
+          "streaming_corpus_index_fold", "streaming_corpus_compact_crash_replay"),
+        Seq("streaming_corpus_e2e_full", "streaming_corpus_e2e_crash_replay")
+      ).foreach { group =>
+        val ref = rows(group.head)
+        assert(ref.nonEmpty, s"${group.head} kept no docs")
+        group.tail.foreach(q =>
+          assert(rows(q) == ref, s"$q diverged from ${group.head}"))
+      }
+    } finally {
+      val runId = graft.queries.StreamQueries.runId
+      new java.io.File(sys.props("java.io.tmpdir")).listFiles()
+        .filter(f => f.getName.startsWith("graft_gate_sc") &&
+          f.getName.endsWith(s"_$runId"))
+        .foreach(f => org.apache.commons.io.FileUtils.deleteDirectory(f))
+    }
+  }
 }

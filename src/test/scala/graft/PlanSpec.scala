@@ -314,7 +314,7 @@ class PlanSpec extends AnyFunSuite {
   test("nd-guarded filters stay above the scoring projection (no pushdown " +
       "through the repartition barrier)") {
     // The corpus pipelines' per-batch bodies rely on two plan properties
-    // (StreamQueries.corpusFullOnBatch): (1) projections do NOT collapse
+    // (CorpusPipeline.onBatch): (1) projections do NOT collapse
     // across a RepartitionByExpression, so an exchange is a materialization
     // barrier for an expensive expression (redact must not inline into the
     // downstream scoring), and (2) a filter whose condition carries an
