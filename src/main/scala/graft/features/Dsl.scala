@@ -1,7 +1,7 @@
 package graft.features
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{avg, greatest, least, lit, stddev_samp}
+import org.apache.spark.sql.functions.{greatest, least, lit}
 import org.apache.spark.sql.{functions => F}
 
 /** The feature-pipeline DSL (SURVEY.md §2.10) — the Spark-native equivalent
@@ -9,13 +9,18 @@ import org.apache.spark.sql.{functions => F}
   * 724-1085) and its JSON pipeline serialization (feature/kit.py:959-979,
   * feature/utils.py:132-303).
   *
-  * A [[FSpec]] is a pure value tree; [[Dsl.compile]] lowers it to a Catalyst
-  * `Column`, so the whole pipeline executes as ONE `select` — Catalyst
-  * supplies the dependency ordering, common-subexpression reuse, and codegen
-  * that the reference hand-rolls with its name-keyed column cache and Kahn
-  * topological sort (feature/kit.py:985-1012). Output names reproduce the
-  * reference's auto-naming convention (`close_sma_20`, `add(x,y)`;
-  * feature/base.py:485-492,1262) so a name-keyed cache contract survives.
+  * A [[FSpec]] is a pure value tree; [[Dsl.build]] runs a pipeline as ONE
+  * typed ordered pass ([[RollKernel]]): every built-in window node becomes
+  * a ring-buffer slot of a single `mapPartitions` over the bars laid out by
+  * bar_ts (range partitions with a preview of the preceding rows when
+  * unkeyed, key runs when keyed), evaluated in dependency order and shared
+  * by every feature that uses it — the job the reference hand-rolls with
+  * its name-keyed column cache and Kahn topological sort
+  * (feature/kit.py:985-1012). Element-wise nodes and registered calls stay
+  * Catalyst expressions, so their null and ANSI semantics are Spark's.
+  * Output names reproduce the reference's auto-naming convention
+  * (`close_sma_20`, `add(x,y)`; feature/base.py:485-492,1262) so a
+  * name-keyed cache contract survives.
   *
   * JSON codec is hand-rolled over a minimal recursive grammar — no
   * reflection, no external libraries; [[Dsl.fromJson]] inverts
@@ -163,7 +168,7 @@ object Dsl {
     registry.put(name, (cs, args, kw, skw, _) => f(cs, args, kw, skw))
 
   /** Windowed registration: like [[registerExtFull]] but the function
-    * also receives the pipeline's partition columns (compile's `p`), so
+    * also receives the pipeline's partition columns (build's `p`), so
     * stateful/window transforms join the serializable surface with the
     * same keyed layout as the built-in rolls.
     */
@@ -215,51 +220,104 @@ object Dsl {
       s"$fn(${parts.mkString(",")})"
   }
 
-  /** Lower a spec to a Catalyst Column (ordering by bar_ts, optional
-    * per-symbol partitioning like the rest of the feature library).
-    */
-  def compile(s: FSpec, p: Seq[String] = Nil): Column = s match {
-    case FCol(c)   => F.col(c)
-    case FConst(v) => lit(v)
-    case FUnary("abs", x)   => F.abs(compile(x, p))
-    case FUnary("log", x)   => F.log(compile(x, p))
-    case FUnary("log1p", x) => F.log1p(compile(x, p))
-    case FUnary("sqrt", x)  => F.sqrt(compile(x, p))
-    case FUnary("neg", x)   => -compile(x, p)
-    case FUnary(op, _)      => throw new IllegalArgumentException(s"unary op $op")
-    case FBinary("add", a, b) => compile(a, p) + compile(b, p)
-    case FBinary("sub", a, b) => compile(a, p) - compile(b, p)
-    case FBinary("mul", a, b) => compile(a, p) * compile(b, p)
-    case FBinary("div", a, b) => compile(a, p) / compile(b, p)
-    case FBinary("min", a, b) => least(compile(a, p), compile(b, p))
-    case FBinary("max", a, b) => greatest(compile(a, p), compile(b, p))
-    case FBinary(op, _, _)    => throw new IllegalArgumentException(s"binary op $op")
-    case FClip(x, lo, hi) => least(greatest(compile(x, p), lit(lo)), lit(hi))
-    case FLag(x, n)       => F.lag(compile(x, p), n).over(Features.w(p))
-    case FRet(x, n, isLog) =>
-      val c = compile(x, p)
-      val l = F.lag(c, n).over(Features.w(p))
-      if (isLog) F.log(c / l) else c / l - 1
-    case FRoll("sma", x, n)    => Features.full(n, avg(compile(x, p)).over(Features.rows(n, p)), p)
-    case FRoll("std", x, n)    => Features.full(n, stddev_samp(compile(x, p)).over(Features.rows(n, p)), p)
-    case FRoll("min", x, n)    => Features.full(n, F.min(compile(x, p)).over(Features.rows(n, p)), p)
-    case FRoll("max", x, n)    => Features.full(n, F.max(compile(x, p)).over(Features.rows(n, p)), p)
-    case FRoll("median", x, n) => Features.rollingMedian(compile(x, p), n, p)
-    case FRoll("ewma", x, n)   => Ewm.ewmaWindowed(compile(x, p), n, p = p)
-    case FRoll("zscore", x, n) => Features.zscore(compile(x, p), n, ddof = 0, p = p)
-    case FRoll("burst", x, n)  => Features.burstRatio(compile(x, p), n, p)
-    case FRoll(op, _, _)       => throw new IllegalArgumentException(s"roll op $op")
-    case FCall(fn, xs, as, kw, skw) =>
-      resolveCall(fn)(xs.map(compile(_, p)), as, kw.toMap, skw.toMap, p)
-  }
-
   /** The `FeatureKit.build` equivalent: retained columns ∪ one aliased
-    * column per feature, in a single select.
+    * column per feature, over the input's rows ordered by bar_ts (within
+    * each key of `p`).
+    *
+    * Built-in window nodes — `FRoll`, `FLag`, and the lag inside `FRet` —
+    * become slots of ONE [[RollKernel]] pass (deduplicated, so a node shared
+    * by several features runs once); everything else stays Catalyst:
+    *  - a window node's window-free input (beyond a bare column or
+    *    constant) is a column of a pre-projection before the kernel's
+    *    layout, so registered windowed calls there (`zscore_peaks`) stay
+    *    Catalyst windows over the input;
+    *  - element-wise nodes between window nodes are Catalyst expressions
+    *    the kernel binds to its working row;
+    *  - nodes above the last window node (including registered windowed
+    *    calls) are Catalyst columns of the final select over the kernel's
+    *    output.
+    * A pipeline without window nodes is that final select alone.
     */
   def build(df: DataFrame, feats: Seq[Feature], retain: Seq[String],
-            p: Seq[String] = Nil): DataFrame =
-    df.select(retain.map(F.col) ++
-      feats.map(f => compile(f.spec, p).as(f.name)): _*)
+            p: Seq[String] = Nil): DataFrame = {
+    val slots = scala.collection.mutable.ArrayBuffer[RollKernel.Slot]()
+    val slotOf = scala.collection.mutable.HashMap[(String, Int, FSpec), Column]()
+    val pre = scala.collection.mutable.LinkedHashMap[FSpec, String]()
+
+    def windowed(s: FSpec): Boolean = s match {
+      case _: FLag | _: FRet | _: FRoll => true
+      case FCol(_) | FConst(_)          => false
+      case FUnary(_, x)                 => windowed(x)
+      case FBinary(_, a, b)             => windowed(a) || windowed(b)
+      case FClip(x, _, _)               => windowed(x)
+      case FCall(_, xs, _, _, _)        => xs.exists(windowed)
+    }
+    def slot(op: String, x: FSpec, n: Int): Column = {
+      require(n >= 1, s"window length must be >= 1, got $op($n)")
+      slotOf.getOrElse((op, n, x), {
+        // the input lowers first, so every slot follows the slots it reads
+        val c = RollKernel.Slot(op, n, lower(x, inKernel = true))
+        slots += c
+        val ref = F.col(RollKernel.slotName(slots.length - 1))
+        slotOf((op, n, x)) = ref
+        ref
+      })
+    }
+    def lower(s: FSpec, inKernel: Boolean): Column = s match {
+      case FCol(_) | FConst(_) => elementwise(s, p, lower(_, inKernel))
+      case _ if !windowed(s) =>
+        if (inKernel) F.col(pre.getOrElseUpdate(s, s"__dsl_p${pre.size}"))
+        else elementwise(s, p, lower(_, inKernel))
+      case FLag(x, n)  => slot("lag", x, n)
+      case FRet(x, n, isLog) =>
+        val c = lower(x, inKernel)
+        val l = slot("lag", x, n)
+        if (isLog) F.log(c / l) else c / l - 1
+      case FRoll(op, x, n) =>
+        require(rollOps(op), s"roll op $op")
+        slot(op, x, n)
+      case _ => elementwise(s, p, lower(_, inKernel))
+    }
+
+    val outs = feats.map(f => lower(f.spec, inKernel = false).as(f.name))
+    val select = retain.map(F.col) ++ outs
+    if (slots.isEmpty) df.select(select: _*)
+    else {
+      val in = df.select(F.col("*") +: pre.toSeq.map { case (s, name) =>
+        elementwise(s, p, lower(_, inKernel = false)).as(name)
+      }: _*)
+      RollKernel.run(in, slots.toSeq, p).select(select: _*)
+    }
+  }
+
+  private val rollOps =
+    Set("sma", "std", "min", "max", "median", "ewma", "zscore", "burst")
+
+  /** One element-wise node as a Catalyst Column, its children lowered by
+    * `go` (window nodes are [[build]]'s kernel slots, never lowered here).
+    */
+  private def elementwise(s: FSpec, p: Seq[String], go: FSpec => Column): Column =
+    s match {
+      case FCol(c)   => F.col(c)
+      case FConst(v) => lit(v)
+      case FUnary("abs", x)   => F.abs(go(x))
+      case FUnary("log", x)   => F.log(go(x))
+      case FUnary("log1p", x) => F.log1p(go(x))
+      case FUnary("sqrt", x)  => F.sqrt(go(x))
+      case FUnary("neg", x)   => -go(x)
+      case FUnary(op, _)      => throw new IllegalArgumentException(s"unary op $op")
+      case FBinary("add", a, b) => go(a) + go(b)
+      case FBinary("sub", a, b) => go(a) - go(b)
+      case FBinary("mul", a, b) => go(a) * go(b)
+      case FBinary("div", a, b) => go(a) / go(b)
+      case FBinary("min", a, b) => least(go(a), go(b))
+      case FBinary("max", a, b) => greatest(go(a), go(b))
+      case FBinary(op, _, _)    => throw new IllegalArgumentException(s"binary op $op")
+      case FClip(x, lo, hi) => least(greatest(go(x), lit(lo)), lit(hi))
+      case FCall(fn, xs, as, kw, skw) =>
+        resolveCall(fn)(xs.map(go), as, kw.toMap, skw.toMap, p)
+      case w => throw new IllegalArgumentException(s"window node $w is not element-wise")
+    }
 
   // --- JSON codec --------------------------------------------------------
 

@@ -17,8 +17,9 @@ import Scan.Affine
   *                                      S_y' = q·S_y + y ; S_y2' = q·S_y2 + y²
   *   ewmst (core/volatility.py:139-219): same with α_t = 1 − exp(−Δt/halfLife)
   *
-  * Windowed (truncated-tail) Column variants exist for the DuckDB oracle:
-  * with K chosen so q^K < 1e-17, the truncated sum differs from the exact
+  * Windowed (truncated-tail) EWMA variants exist for the DuckDB oracle and
+  * the feature DSL: with K chosen so the dropped tail q^K is below 1e-9
+  * ([[Ewm.ewmaWindowK]]), the truncated sum differs from the exact
   * recursion by far less than the 1e-6 output rounding.
   */
 object Ewm {
@@ -224,7 +225,9 @@ object Ewm {
 
   /** Truncated-window EWMA as a pure Column expression: a K-row collected
     * frame folded with weights q^(K−1−i). Matches the exact recursion to
-    * ~q^K relative error (q^400 ≈ 4e-18 for span 20).
+    * ~q^K relative error, so K must grow with the span: q^400 ≈ 4e-18 at
+    * span 20 but 3e-4 at span 100. [[ewmaWindowK]] gives the K that holds
+    * 1e-9 at any span; callers state K explicitly.
     *
     * NULL semantics caveat: collect_list drops nulls, so a null inside
     * the frame re-indexes the weights over the SURVIVORS — pandas
@@ -233,7 +236,7 @@ object Ewm {
     * exactly on null-free input (every gate); feed null-bearing series
     * through the exact scan when the distinction matters.
     */
-  def ewmaWindowed(c: Column, span: Int, k: Int = 400,
+  def ewmaWindowed(c: Column, span: Int, k: Int,
                    p: Seq[String] = Nil): Column =
     ewmaOverFrame(c, span, k, Features.w(p))
 
@@ -319,37 +322,6 @@ object Ewm {
     }
     if (safe) ewmaExact(df, valueCol, span, out, keyCols = keyCols)
     else ewmaWindowedKeyed(df, valueCol, span, out, keyCols, orderCols)
-  }
-
-  /** Truncated-window EW std (adjust=True, bias=False). */
-  def ewmsWindowed(c: Column, span: Int, k: Int = 400,
-                   p: Seq[String] = Nil): Column = {
-    val q = 1.0 - 2.0 / (span + 1.0)
-    val arr = collect_list(c).over(Features.w(p).rowsBetween(-(k - 1), 0))
-    val m = size(arr)
-    val sy = aggregate(transform(arr, (y, i) => y * pow(lit(q), m - 1 - i)),
-      lit(0.0), (acc, x) => acc + x)
-    val syy = aggregate(transform(arr, (y, i) => y * y * pow(lit(q), m - 1 - i)),
-      lit(0.0), (acc, x) => acc + x)
-    val sw = (lit(1.0) - pow(lit(q), m)) / lit(1.0 - q)
-    val sw2 = (lit(1.0) - pow(lit(q * q), m)) / lit(1.0 - q * q)
-    val mean = sy / sw
-    val denom = sw - sw2 / sw
-    when(denom > 0,
-      sqrt(greatest((syy / sw - mean * mean) * sw / denom, lit(0.0))))
-  }
-
-  /** Truncated-window Wilder moving average (α = 1/w, steady state):
-    * avg_t ≈ (1/w)·Σ x_i q^(t-i), q = (w−1)/w — the seed term q^t is below
-    * double noise for K ≥ 400.
-    */
-  def wilderWindowed(c: Column, w: Int, k: Int = 600,
-                     p: Seq[String] = Nil): Column = {
-    val q = (w - 1.0) / w
-    val arr = collect_list(c).over(Features.w(p).rowsBetween(-(k - 1), 0))
-    aggregate(
-      transform(arr, (y, i) => y * pow(lit(q), size(arr) - 1 - i)),
-      lit(0.0), (acc, x) => acc + x) / w
   }
 
   /** Exact seeded Wilder RSI (core/momentum.py:25-65): seed = simple mean of

@@ -186,7 +186,7 @@ object FeatureQueries {
         .withColumn("dur1", barDuration(1))
         .withColumn("dur5", barDuration(5))
       val ew = base.where(col("dur1").isNotNull)
-        .withColumn("dur_ewma20", graft.features.Ewm.ewmaWindowed(col("dur1"), 20))
+        .withColumn("dur_ewma20", graft.features.Ewm.ewmaWindowed(col("dur1"), 20, k = 400))
         .select(col("bar_ts"), col("dur_ewma20"))
       base.join(ew, Seq("bar_ts"), "left")
         .select(col("bar_ts"), r6(col("dur1")).as("dur1"),

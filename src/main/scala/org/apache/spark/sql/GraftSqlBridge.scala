@@ -1,14 +1,22 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ catalyst Expression bridge. Spark 4 removed the public
   * `new Column(expr)` constructor; the supported conversion lives in
   * `classic.ExpressionUtils`, which is `private[sql]` — so this one-file
   * shim sits inside the package, the same pattern Spark-extension
   * libraries use to surface custom Catalyst expressions as Columns.
+  * [[internalDataFrame]] likewise surfaces the `private[sql]`
+  * `InternalRow` frame constructor for typed `mapPartitions` kernels.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  def internalDataFrame(spark: SparkSession, rows: RDD[InternalRow],
+                        schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

@@ -242,4 +242,122 @@ class DslSpec extends AnyFunSuite {
     assert(viaSpec == direct)
     assert(viaSpec.exists(_.getBoolean(2)), "fixture must close at least one bar")
   }
+
+  /** Raw-double equality: both NULL, or equal values (NaN equals NaN). */
+  private def sameDouble(a: Any, b: Any): Boolean = (a, b) match {
+    case (null, null) => true
+    case (x: Double, y: Double) => x == y || (x.isNaN && y.isNaN)
+    case _ => false
+  }
+
+  private def shuffleCount(rdd: org.apache.spark.rdd.RDD[_]): Int =
+    rdd.dependencies.map {
+      case d: org.apache.spark.ShuffleDependency[_, _, _] => 1 + shuffleCount(d.rdd)
+      case d => shuffleCount(d.rdd)
+    }.sum
+
+  test("ewma(span 100) matches the exact adjust=True recursion to 1e-9") {
+    import org.apache.spark.sql.functions.col
+    val rnd = new scala.util.Random(3)
+    var px = 100.0
+    val df = (1 to 1500).map { i =>
+      px *= math.exp(0.01 * rnd.nextGaussian()); (i.toLong, px)
+    }.toDF("bar_ts", "close")
+    val viaDsl = Dsl.build(df, Seq(Dsl.col("close").ewma(100)), Seq("bar_ts"))
+      .orderBy("bar_ts").collect().map(_.getDouble(1))
+    val exact = graft.features.Ewm.ewmaExact(
+        df.withColumn("ts", col("bar_ts")).withColumn("id", col("bar_ts")), "close", 100)
+      .orderBy("bar_ts").collect().map(_.getAs[Double]("ewma"))
+    assert(viaDsl.length == exact.length)
+    val worst = viaDsl.zip(exact).map { case (a, b) => math.abs(a - b) / math.abs(b) }.max
+    assert(worst <= 1e-9, s"max relative error $worst")
+  }
+
+  test("window kernel equals the Catalyst window columns at any partitioning") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.functions._
+    import graft.features.{Ewm, Features}
+    val rnd = new scala.util.Random(5)
+    // a 600-bar and a 150-bar series; v carries nulls (never on a series'
+    // first bar: an all-null frame has no Catalyst ewma to compare with)
+    val rows = Seq("a" -> 600, "b" -> 150).flatMap { case (sym, len) =>
+      var px = 50.0
+      (1 to len).map { i =>
+        px *= math.exp(0.02 * rnd.nextGaussian())
+        val v: Option[Double] =
+          if (i % 23 == 7 || i % 41 == 12) None else Some(1 + math.floor(rnd.nextDouble() * 9))
+        (sym, i.toLong * 300 + (if (sym == "a") 0 else 7), px, v)
+      }
+    }
+    val all = rows.toDF("sym", "bar_ts", "close", "v")
+    val one = all.where(col("sym") === "a")
+
+    def dslOps(f: Feature): Seq[Feature] = Seq(f.sma(5), f.rollStd(7), f.rollMin(4),
+      f.rollMax(6), f.rollMedian(5), f.rollMedian(6), f.ewma(10), f.ewma(30),
+      f.zscore(8), f.burst(5), f.lag(3), f.ret(2), f.logRet(1))
+    def refOps(c: Column, p: Seq[String]): Seq[Column] = {
+      val w = Features.w(p)
+      def full(n: Int, agg: Column => Column) = Features.full(n, agg(c).over(Features.rows(n, p)), p)
+      Seq(Features.sma(c, 5, p), full(7, stddev_samp), full(4, min), full(6, max),
+        Features.rollingMedian(c, 5, p), Features.rollingMedian(c, 6, p),
+        Ewm.ewmaWindowed(c, 10, Ewm.ewmaWindowK(10), p),
+        Ewm.ewmaWindowed(c, 30, Ewm.ewmaWindowK(30), p),
+        Features.zscore(c, 8, ddof = 0, p = p), Features.burstRatio(c, 5, p),
+        lag(c, 3).over(w), c / lag(c, 2).over(w) - 1, log(c / lag(c, 1).over(w)))
+    }
+    val x = Dsl.col("close")
+    val v = Dsl.col("v")
+    val feats = dslOps(x) ++ dslOps(v) ++ Seq(
+      x.logRet(1).rollStd(20), v.zscore(3).abs, v.ewma(10) min v.rollMax(4))
+    // without an ewma the preview is only the 20-row window-over-window chain
+    val chain = Seq(x.logRet(1).rollStd(20), x.lag(3))
+    def collect(df: DataFrame, names: Seq[String]): Seq[Seq[Any]] =
+      df.orderBy("sym", "bar_ts").select(names.map(n => col(s"`$n`")): _*)
+        .collect().map(_.toSeq).toSeq
+    def reference(df: DataFrame, p: Seq[String], fs: Seq[Feature]): Seq[Seq[Any]] = {
+      val w = Features.w(p)
+      val base = df.withColumn("__lr", log(col("close") / lag(col("close"), 1).over(w)))
+      val refs = refOps(col("close"), p) ++ refOps(col("v"), p) ++ Seq(
+        Features.full(20, stddev_samp(col("__lr")).over(Features.rows(20, p)), p),
+        abs(Features.zscore(col("v"), 3, ddof = 0, p = p)),
+        least(Ewm.ewmaWindowed(col("v"), 10, Ewm.ewmaWindowK(10), p),
+          Features.full(4, max(col("v")).over(Features.rows(4, p)), p)))
+      collect(base.select(Seq(col("sym"), col("bar_ts")) ++
+        refs.zip(feats).map { case (c, f) => c.as(f.name) }: _*), fs.map(_.name))
+    }
+    def viaDsl(df: DataFrame, p: Seq[String], fs: Seq[Feature], parts: Int): Seq[Seq[Any]] = {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val out = Dsl.build(df, fs, Seq("sym", "bar_ts"), p)
+      assert(!out.queryExecution.executedPlan.toString.contains("Window"),
+        out.queryExecution.executedPlan.toString)
+      assert(shuffleCount(out.rdd) == 1, "the kernel pays one layout shuffle")
+      if (p.isEmpty && parts == 5)
+        assert(out.rdd.getNumPartitions >= 3, "unkeyed layout spans >= 3 ranges")
+      collect(out, fs.map(_.name))
+    }
+    def sameRows(a: Seq[Seq[Any]], b: Seq[Seq[Any]], fs: Seq[Feature], what: String)(
+        eq: (Any, Any) => Boolean) = {
+      assert(a.length == b.length, what)
+      a.zip(b).zipWithIndex.foreach { case ((ra, rb), i) =>
+        ra.zip(rb).zip(fs).foreach { case ((ca, cb), f) =>
+          assert(eq(ca, cb), s"$what: row $i ${f.name}: $ca vs $cb")
+        }
+      }
+    }
+    val bits = (a: Any, b: Any) => (a, b) match {
+      case (x: Double, y: Double) =>
+        java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(y)
+      case _ => a == b
+    }
+    try {
+      for ((df, p, fs) <- Seq((one, Nil, feats), (one, Nil, chain), (all, Seq("sym"), feats))) {
+        val ref = reference(df, p, fs)
+        val k1 = viaDsl(df, p, fs, 1)
+        val k5 = viaDsl(df, p, fs, 5)
+        sameRows(k1, ref, fs, s"kernel vs Catalyst, keys=$p")(sameDouble)
+        sameRows(k5, k1, fs, s"5 vs 1 partitions, keys=$p")(bits)
+        assert(k1.exists(_.forall(_ != null)), "fixture must warm every window")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+  }
 }
