@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
+import scala.util.control.NonFatal
 
 /** Engine-wide tuning knobs read from the environment. */
 object Conf {
@@ -67,7 +68,7 @@ object Conf {
             val p = new org.apache.hadoop.fs.Path(sfDir)
             val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-          } catch { case _: Throwable => 0L }
+          } catch { case NonFatal(_) => 0L }
         val byData = ((bytes + (32L << 20) - 1) / (32L << 20)).toInt
         math.max(1, math.min(byData, spark.sparkContext.defaultParallelism))
       }

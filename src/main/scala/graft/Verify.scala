@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -25,8 +26,9 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case NonFatal(e) =>
+        System.err.println(
+          s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
       // per-query cache isolation, as Bench's resetState does between
       // reps: ~40 gates persist fixture frames (r14 advice) and a single

@@ -202,25 +202,29 @@ object Dedup {
     comp
   }
 
-  /** Exact n-gram Jaccard for candidate pairs: join the (distinct) shingle
-    * sets back and compute |∩| / |∪|. Only candidate pairs pay this cost —
-    * literally: docs are semi-joined down to the ids that appear in some
-    * pair BEFORE shingling, so the corpus-wide cost of the verify stage is
-    * a column scan, not a re-shingling of every document per join side.
-    * No forced broadcast: with the maxBucket cap the id set is tiny and
-    * AQE broadcasts it; without the cap it is not provably bounded, and
-    * the semi join degrades gracefully to a shuffle instead of an OOM.
+  /** Exact n-gram Jaccard for candidate pairs: join each side's token
+    * array to the pair rows, shingle there and compute |∩| / |∪|. Only
+    * candidate pairs pay this cost: a doc that appears in no pair is never
+    * shingled, so the corpus-wide cost of the verify stage is one column
+    * scan of `(id, toks)`, not a re-shingling of every document.
+    *
+    * `pairs` is read ONCE (both joins hang off the same pair rows), so a
+    * candidate subtree upstream (band rows → bucket join → distinct) is
+    * planned once, not once per consumer as with a separate id set.
+    * `docs` is one projection that both joins share: when Spark exchanges
+    * or broadcasts the docs side, the second join reuses that exchange
+    * and docs is scanned once. No forced broadcast: neither side is
+    * provably bounded, so AQE broadcasts whichever is small at runtime
+    * and the joins otherwise degrade to shuffles instead of an OOM.
     */
   def jaccardVerify(pairs: DataFrame, docs: DataFrame, idCol: String,
                     toksCol: String, shingleN: Int): DataFrame = {
-    val ids = pairs.select(col("id_a").as("id"))
-      .union(pairs.select(col("id_b").as("id"))).distinct()
-    val sh = docs.join(ids, col(idCol) === col("id"), "leftsemi")
-      .select(col(idCol).as("id"),
-        TextOps.shingles(col(toksCol), shingleN).as("sh"))
+    val d = docs.select(col(idCol), col(toksCol))
     pairs
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
+      .join(d.toDF("id_a", "toks_a"), "id_a")
+      .join(d.toDF("id_b", "toks_b"), "id_b")
+      .withColumn("sh_a", TextOps.shingles(col("toks_a"), shingleN))
+      .withColumn("sh_b", TextOps.shingles(col("toks_b"), shingleN))
       .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
       .withColumn("jaccard", col("n_common").cast("double") /
         (size(col("sh_a")) + size(col("sh_b")) - col("n_common")))
@@ -262,9 +266,10 @@ object Dedup {
     * index `baseBands` (columns `bucket`, `base_id`) — the write-once/
     * read-many ingest shape: the historical corpus's k·|shingles| signature
     * work happened at index-build time ([[writeLshIndex]]), so a delta
-    * probe reads band ROWS, not base text. Only candidate base docs (the
-    * ids that actually share a bucket with the delta) are read back for
-    * the exact-Jaccard verify, via `jaccardVerify`'s semi-join.
+    * probe reads band ROWS, not base text. The base text is read as one
+    * `(id, toks)` column scan joined to the candidate pairs, and only
+    * candidate docs (the ids that actually share a bucket with the delta)
+    * are shingled for the exact-Jaccard verify ([[jaccardVerify]]).
     */
   def incrementalLshPairsFrom(baseBands: DataFrame, base: DataFrame,
                               delta: DataFrame, idCol: String,

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -337,6 +338,28 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
   }
 
+  /** As-read schemas of the parquet IVF index directories (file sources
+    * read every field nullable). The index writes these directories
+    * itself, so its reads pass the schema instead of launching a
+    * footer-inference job per read. `cells` lists the data columns only:
+    * the `cell` partition column is discovered from the directory names,
+    * exactly as an inferred read discovers it.
+    */
+  private[graft] val ivfCellsSchema = StructType.fromDDL("id BIGINT, nv ARRAY<DOUBLE>")
+  private[graft] val ivfCentroidsSchema = StructType.fromDDL("cell BIGINT, cvec ARRAY<DOUBLE>")
+  private[graft] val ivfTombstonesSchema = StructType.fromDDL("id BIGINT")
+
+  private def ivfCells(spark: org.apache.spark.sql.SparkSession,
+                       dir: String): DataFrame =
+    spark.read.schema(ivfCellsSchema).parquet(s"$dir/cells")
+
+  private def ivfCentroids(spark: org.apache.spark.sql.SparkSession,
+                           dir: String): Array[(Long, Array[Double])] = {
+    import spark.implicits._
+    spark.read.schema(ivfCentroidsSchema).parquet(s"$dir/centroids")
+      .as[(Long, Array[Double])].collect().sortBy(_._1)
+  }
+
   /** Materialize an IVF index as a PARQUET LAYOUT: unit-normalized vectors
     * written `partitionBy(cell)` (cell = nearest centroid), centroids
     * alongside. This is ANN as Spark-native storage design — the "index" is
@@ -401,12 +424,7 @@ object Similarity {
     */
   def ivfIndexAppend(emb: DataFrame, idCol: String, vecCol: String,
                      dir: String): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .select(col("cell").cast("long"), col("cvec"))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    assignCells(emb, idCol, vecCol, cents)
+    assignCells(emb, idCol, vecCol, ivfCentroids(emb.sparkSession, dir))
       // one file per touched cell per batch (same clustering rationale as
       // ivfIndexWrite) — also what keeps the per-batch append cost and
       // the fold's file-count growth ∝ touched cells, not tasks × cells
@@ -431,7 +449,9 @@ object Similarity {
                             dir: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(s"$dir/tombstones")) else None
+    if (fs.exists(p))
+      Some(spark.read.schema(ivfTombstonesSchema).parquet(s"$dir/tombstones"))
+    else None
   }
 
   /** IN-STREAM committed-batch FILE fold for the live IVF ingest loop —
@@ -455,22 +475,44 @@ object Similarity {
     graft.sources.Store.compactPartitioned(spark, s"$dir/cells", "cell=",
       targetBytes)
 
-  /** Fold tombstones into a physical rewrite: active rows land as a FRESH
-    * partitioned index under `newDir` (same layout as [[ivfIndexWrite]],
-    * centroids copied verbatim — the codebook is unchanged, only dead
-    * rows drop). `newDir` must differ: production swaps readers over by
+  /** Fold tombstones into a physical rewrite: the index lands as a FRESH
+    * partitioned index under `newDir` (same layout as [[ivfIndexWrite]]).
+    * Only DIRTY cells — those holding a tombstoned vector — are rewritten,
+    * minus their dead rows; every clean cell's files and the centroids
+    * (the codebook is unchanged) are copied file by file, with no Spark
+    * job. Finding the dirty cells is one semi-join of the cells against
+    * the (takedown-sized) tombstones, and only runs when a tombstone
+    * directory exists, so an index with no deletions compacts by copying
+    * alone. `newDir` must differ: production swaps readers over by
     * path/catalog rename, the same versioned swap as the dedup index's
     * [[graft.dedup.Dedup.compactLshIndex]].
     */
   def ivfCompact(spark: org.apache.spark.sql.SparkSession, dir: String,
                  newDir: String): Unit = {
     require(newDir != dir, "ivfCompact rewrites into a NEW dir (versioned swap)")
-    val cells = spark.read.parquet(s"$dir/cells")
-    ivfTombstones(spark, dir).fold(cells)(t =>
-        cells.join(t.select(col("id")), Seq("id"), "left_anti"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$newDir/cells")
-    spark.read.parquet(s"$dir/centroids")
-      .write.mode("overwrite").parquet(s"$newDir/centroids")
+    import spark.implicits._
+    val src = new org.apache.hadoop.fs.Path(s"$dir/cells")
+    val dst = new org.apache.hadoop.fs.Path(s"$newDir/cells")
+    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tomb = ivfTombstones(spark, dir).map(_.select(col("id")))
+    val dirty = tomb.fold(Set.empty[Long])(t =>
+      ivfCells(spark, dir).join(t, Seq("id"), "left_semi")
+        .select(col("cell").cast("long")).as[Long].collect().toSet)
+    if (fs.exists(dst)) fs.delete(dst, true)
+    for (t <- tomb if dirty.nonEmpty)
+      ivfCells(spark, dir).where(col("cell").isin(dirty.toSeq: _*))
+        .join(t, Seq("id"), "left_anti")
+        .write.partitionBy("cell").parquet(dst.toString)
+    fs.mkdirs(dst)
+    def copy(from: org.apache.hadoop.fs.Path, to: org.apache.hadoop.fs.Path) =
+      org.apache.hadoop.fs.FileUtil.copy(fs, from, fs, to, false, fs.getConf)
+    fs.listStatus(src)
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("cell=") &&
+        !dirty(d.getPath.getName.stripPrefix("cell=").toLong))
+      .foreach(d => copy(d.getPath, new org.apache.hadoop.fs.Path(dst, d.getPath.getName)))
+    val cents = new org.apache.hadoop.fs.Path(s"$newDir/centroids")
+    if (fs.exists(cents)) fs.delete(cents, true)
+    copy(new org.apache.hadoop.fs.Path(s"$dir/centroids"), cents)
   }
 
   /** Top-k through the parquet IVF index: centroids load driver-side
@@ -487,9 +529,7 @@ object Similarity {
                    queries: DataFrame, idCol: String, vecCol: String,
                    k: Int, nprobe: Int = 8): DataFrame = {
     import spark.implicits._
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .select(col("cell").cast("long"), col("cvec"))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
+    val cents = ivfCentroids(spark, dir)
     def nearestCells(n: Int, v: Array[Double]) =
       cents.map { case (cid, cvec) => (cid, dotArr(v, cvec)) }
         .sortBy { case (cid, d) => (-d, cid) }.take(n).map(_._1)
@@ -499,7 +539,7 @@ object Similarity {
     val cells = probePairs.map(_._2).distinct.sorted
     val probes = broadcast(probePairs.toDF("query_id", "cell"))
     val qMap = spark.sparkContext.broadcast(qArr.toMap)
-    val pruned = spark.read.parquet(s"$dir/cells")
+    val pruned = ivfCells(spark, dir)
       .where(col("cell").isin(cells: _*)) // -> PartitionFilters, prunes dirs
     val scan = ivfTombstones(spark, dir).fold(pruned)(t =>
       pruned.join(t.select(col("id")), Seq("id"), "left_anti"))

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Per-micro-batch APPEND STATE with exactly-once replay and a compaction
   * lifecycle — the state-dir discipline behind the live corpus pipeline's
@@ -51,12 +52,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * finishes the flip and the deletes from any crash point, and a
   * replayed batch's [[publishBatch]] cannot collide with a fold because
   * folds only ever cover batches whose commits are already durable.
+  *
+  * KNOWN SCHEMA: the store wrote every file under the root itself, so it
+  * never asks Spark to infer the schema (a one-task footer-reading job per
+  * `spark.read.parquet`, on every probe). [[publishBatch]] records the
+  * frame's as-read schema (every field nullable, as file sources relax it)
+  * in a `_schema.json` sidecar at the root, and [[read]], [[readBefore]]
+  * and [[compact]] pass it to the reader; the `batch` partition column is
+  * still discovered from the directory names. Spark's file listing skips
+  * every `_`- or `.`-prefixed name, so the sidecar, like the journals and
+  * staging dirs here, is invisible to the data read. It is written BEFORE
+  * the batch's data, as a complete draft renamed into place, so no
+  * partition is ever visible without it and a crash never leaves a partial
+  * sidecar; it is rewritten only when a publish changes the schema. A root
+  * without a sidecar (written by an older version) falls back to
+  * inference.
   */
 object StateStore {
 
   private val tmpPrefix = "_state_tmp_"
   private val wipPrefix = "_graft_state_wip_"
   private val journalPrefix = "_graft_state_journal_"
+  private val schemaFile = "_schema.json"
+  private val schemaWipPrefix = "_schema_wip_"
 
   private def fsOf(spark: SparkSession, root: String) = {
     val p = new org.apache.hadoop.fs.Path(root)
@@ -66,10 +84,51 @@ object StateStore {
   /** Publish one batch's state delta — `mode("overwrite")` scoped to the
     * batch's own partition dir, so a checkpoint-replayed batch rewrites
     * identical content instead of double-appending. `batchId = -1` is the
-    * day-0 (pre-stream) state by convention.
+    * day-0 (pre-stream) state by convention. The schema sidecar (see
+    * object doc) is brought up to date before the partition is written.
     */
-  def publishBatch(df: DataFrame, root: String, batchId: Long): Unit =
+  def publishBatch(df: DataFrame, root: String, batchId: Long): Unit = {
+    recordSchema(df, root)
     df.write.mode("overwrite").parquet(s"$root/batch=$batchId")
+  }
+
+  /** Write `df`'s as-read schema to the root's sidecar unless it already
+    * holds it: a draft under a `_`-prefixed name, then a rename. Only a
+    * schema change replaces an existing sidecar (delete, then rename); a
+    * crash between the two leaves no sidecar, and readers infer.
+    */
+  private def recordSchema(df: DataFrame, root: String): Unit = {
+    val (rootP, fs) = fsOf(df.sparkSession, root)
+    val schema = GraftSqlBridge.asNullable(df.schema)
+    val sidecar = new org.apache.hadoop.fs.Path(rootP, schemaFile)
+    if (knownSchema(fs, sidecar).contains(schema)) return
+    val wip = new org.apache.hadoop.fs.Path(rootP,
+      s"$schemaWipPrefix${java.util.UUID.randomUUID().toString.take(8)}.json")
+    val out = fs.create(wip, false)
+    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
+    if (fs.exists(sidecar)) fs.delete(sidecar, false)
+    checkedRename(fs, wip, sidecar)
+  }
+
+  private def knownSchema(fs: org.apache.hadoop.fs.FileSystem,
+                          sidecar: org.apache.hadoop.fs.Path): Option[StructType] =
+    if (!fs.exists(sidecar)) None
+    else {
+      val in = fs.open(sidecar)
+      val txt =
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      Some(DataType.fromJson(txt).asInstanceOf[StructType])
+    }
+
+  /** A parquet reader for `root`'s files: with the recorded schema when
+    * the sidecar exists (no inference job), plain otherwise.
+    */
+  private def reader(spark: SparkSession, root: String): DataFrameReader = {
+    val (rootP, fs) = fsOf(spark, root)
+    knownSchema(fs, new org.apache.hadoop.fs.Path(rootP, schemaFile))
+      .fold(spark.read)(s => spark.read.schema(s))
+  }
 
   /** The full state: every batch partition plus every folded generation,
     * with the layout's `batch` partition column dropped (state content is
@@ -82,7 +141,7 @@ object StateStore {
     */
   def read(spark: SparkSession, root: String): DataFrame = {
     recover(spark, root)
-    spark.read.parquet(root).drop("batch")
+    reader(spark, root).parquet(root).drop("batch")
   }
 
   /** AS-OF state read for batch `batchId`'s probes: only partitions with
@@ -97,7 +156,7 @@ object StateStore {
     */
   def readBefore(spark: SparkSession, root: String, batchId: Long): DataFrame = {
     recover(spark, root)
-    spark.read.parquet(root)
+    reader(spark, root).parquet(root)
       .where(org.apache.spark.sql.functions.col("batch") < batchId)
       .drop("batch")
   }
@@ -129,7 +188,7 @@ object StateStore {
     val gen = math.min(dirs.map(_._1).min, -1L) - 1L
     val runId = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new org.apache.hadoop.fs.Path(rootP, s"$tmpPrefix$runId")
-    spark.read.parquet(files.map(_.getPath.toString).toIndexedSeq: _*)
+    reader(spark, root).parquet(files.map(_.getPath.toString).toIndexedSeq: _*)
       .repartition(nOut)
       .write.option("compression", "zstd").parquet(tmp.toString)
     val target = new org.apache.hadoop.fs.Path(rootP, s"batch=$gen")

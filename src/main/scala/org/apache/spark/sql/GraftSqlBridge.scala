@@ -11,7 +11,9 @@ import org.apache.spark.sql.types.StructType
   * shim sits inside the package, the same pattern Spark-extension
   * libraries use to surface custom Catalyst expressions as Columns.
   * [[internalDataFrame]] likewise surfaces the `private[sql]`
-  * `InternalRow` frame constructor for typed `mapPartitions` kernels.
+  * `InternalRow` frame constructor for typed `mapPartitions` kernels,
+  * and [[asNullable]] the `private[spark]` schema relaxation that file
+  * sources apply to every schema they read.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -19,4 +21,5 @@ object GraftSqlBridge {
   def internalDataFrame(spark: SparkSession, rows: RDD[InternalRow],
                         schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+  def asNullable(schema: StructType): StructType = schema.asNullable
 }

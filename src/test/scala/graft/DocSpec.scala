@@ -723,4 +723,201 @@ class DocSpec extends AnyFunSuite {
         .foreach(f => org.apache.commons.io.FileUtils.deleteDirectory(f))
     }
   }
+
+  /** Plan walks that descend into adaptive query stages; a
+    * `ReusedExchange` is a leaf, so a reused subtree counts once.
+    */
+  private object PlanNodes
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** The formulation `jaccardVerify` had before it read `pairs` once: the
+    * pairs' ids (read twice more, one branch per side) semi-join `docs`
+    * down before shingling.
+    */
+  private def jaccardVerifyIdSet(pairs: DataFrame, docs: DataFrame,
+                                 idCol: String, toksCol: String,
+                                 shingleN: Int): DataFrame = {
+    val ids = pairs.select(col("id_a").as("id"))
+      .union(pairs.select(col("id_b").as("id"))).distinct()
+    val sh = docs.join(ids, col(idCol) === col("id"), "leftsemi")
+      .select(col(idCol).as("id"),
+        TextOps.shingles(col(toksCol), shingleN).as("sh"))
+    pairs
+      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
+      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
+      .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
+      .withColumn("jaccard", col("n_common").cast("double") /
+        (size(col("sh_a")) + size(col("sh_b")) - col("n_common")))
+      .select("id_a", "id_b", "n_common", "jaccard")
+  }
+
+  private def verifyRows(df: DataFrame): Seq[(Long, Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSeq.sorted(Ordering.Tuple4(Ordering.Long, Ordering.Long,
+        Ordering.Long, Ordering.Double.TotalOrdering))
+
+  test("jaccardVerify equals the id-set formulation it replaced, as raw doubles") {
+    val tmp = java.nio.file.Files.createTempDirectory("jverify").toString
+    try {
+      def toks(i: Int, n: Int): Seq[String] = (0 until n).map(j => s"w${(i * 7 + j * 3) % 23}")
+      // far more docs than pairs, plus an empty doc and one shorter than shingleN
+      val rows = (1 to 3000).map(i => (i.toLong, toks(i, 6 + i % 9))) ++
+        Seq(5000L -> Seq.empty[String], 5001L -> Seq("a", "b"))
+      rows.toDF("doc_id", "toks").write.parquet(tmp + "/docs")
+      rows.take(120).toDF("doc_id", "toks").write.parquet(tmp + "/sample")
+      val docs = spark.read.parquet(tmp + "/docs")
+      val edge = Seq(
+        1L -> 2L, 1L -> 2L, 1L -> 2L, // duplicate pair rows
+        3L -> 26L, 4L -> 27L, 10L -> 2999L,
+        5000L -> 7L, 5000L -> 5001L, 5001L -> 8L, 5000L -> 5000L,
+        9L -> 9999L, 8888L -> 11L, 7777L -> 6666L) // ids missing from docs
+        .toDF("id_a", "id_b")
+      // candidate pairs as the pipeline makes them, plus the edge cases
+      val cand = Dedup.lshCandidates(spark.read.parquet(tmp + "/sample"),
+        "doc_id", "toks", 3, 16, 8)
+      for (pairs <- Seq(edge, cand, cand.unionByName(edge))) {
+        val got = Dedup.jaccardVerify(pairs, docs, "doc_id", "toks", 3)
+        val want = verifyRows(jaccardVerifyIdSet(pairs, docs, "doc_id", "toks", 3))
+        assert(verifyRows(got) == want)
+      }
+      val want = verifyRows(jaccardVerifyIdSet(edge, docs, "doc_id", "toks", 3))
+      assert(want.count(p => p._1 == 1L && p._2 == 2L) == 3 &&
+        !want.exists(p => p._1 >= 6666L || p._2 >= 6666L) &&
+        want.exists(p => p._1 == 5000L && p._2 == 5001L && p._4 == 0.0) &&
+        want.exists(p => p._1 == 5000L && p._2 == 5000L && p._4 == 1.0),
+        s"fixture lost a case: $want")
+      // behind a candidate subtree, both join sides share one (id, toks)
+      // scan of docs
+      val got = Dedup.jaccardVerify(cand, docs, "doc_id", "toks", 3)
+      assert(got.collect().nonEmpty)
+      val plan = got.queryExecution.executedPlan
+      val scans = PlanNodes.collect(plan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.endsWith("/docs")) => f
+      }
+      assert(scans.size == 1, s"docs scanned ${scans.size} times:\n$plan")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("incrementalLshPairsFrom plans its candidate subtree once and no SortAggregate") {
+    val tmp = java.nio.file.Files.createTempDirectory("lshonce").toString
+    val table = "docspec_lsh_once"
+    try {
+      def mk(lo: Int, hi: Int, path: String): DataFrame = {
+        (lo until hi).map(i => (i.toLong, (0 until 12).map(j => s"w${(i % 17 * 5 + j) % 40}")))
+          .toDF("doc_id", "toks").write.parquet(path)
+        spark.read.parquet(path)
+      }
+      val base = mk(0, 60, tmp + "/base")
+      val delta = mk(100, 130, tmp + "/delta")
+      Dedup.writeLshIndex(base, "doc_id", "toks", 3, 16, 8, table, tmp + "/idx", buckets = 2)
+      val out = Dedup.incrementalLshPairsFrom(spark.table(table), base, delta,
+        "doc_id", "toks", 3, 16, 8, threshold = 0.5)
+      assert(out.collect().nonEmpty, "fixture must produce verified pairs")
+      val plan = out.queryExecution.executedPlan
+      // the delta's band rows are the only Generate: one per planned copy
+      // of the candidate subtree
+      val gens = PlanNodes.collect(plan) {
+        case g: org.apache.spark.sql.execution.GenerateExec => g
+      }
+      assert(gens.size == 1, s"candidate subtree planned ${gens.size} times:\n$plan")
+      val sortAggs = PlanNodes.collect(plan) {
+        case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a
+      }
+      assert(sortAggs.isEmpty, s"SortAggregate in the probe:\n$plan")
+      val baseScans = PlanNodes.collect(plan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.endsWith("/base")) => f
+      }
+      assert(baseScans.size == 1, s"base docs scanned ${baseScans.size} times:\n$plan")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    }
+  }
+
+  /** 8 clusters × 12 vectors (the IVF tests' fixture). */
+  private def ivfFixture(): DataFrame = {
+    val dim = 64
+    def vec(cluster: Int, i: Int): Array[Float] =
+      Array.tabulate(dim) { d =>
+        val base = if (d % 8 == cluster % 8) 1.0f else 0.1f
+        base + 0.05f * (((cluster * 31 + i * 17 + d * 7) % 11) - 5)
+      }
+    (for (c <- 0 until 8; i <- 0 until 12)
+      yield ((c * 12 + i).toLong, vec(c, i).toSeq)).toDF("vec_id", "embedding")
+  }
+
+  test("IVF schema constants equal the inferred schemas of the index directories") {
+    val e = ivfFixture()
+    val cents = Similarity.kmeansCentroids(e, "vec_id", "embedding", nlist = 8, iters = 2)
+    val dir = java.nio.file.Files.createTempDirectory("ivfschema").toString
+    try {
+      Similarity.ivfIndexWrite(e.where(col("vec_id") < 50), "vec_id", "embedding", cents, dir)
+      Similarity.ivfIndexAppend(e.where(col("vec_id") >= 50), "vec_id", "embedding", dir)
+      Similarity.ivfIndexDelete(e.where(col("vec_id") % 7 === 0), "vec_id", dir)
+      val cells = spark.read.parquet(dir + "/cells").schema
+      assert(org.apache.spark.sql.types.StructType(cells.filterNot(_.name == "cell")) ==
+        Similarity.ivfCellsSchema)
+      assert(spark.read.schema(Similarity.ivfCellsSchema).parquet(dir + "/cells").schema == cells,
+        "the known-schema read must still discover the cell partition column")
+      assert(spark.read.parquet(dir + "/centroids").schema == Similarity.ivfCentroidsSchema)
+      assert(spark.read.parquet(dir + "/tombstones").schema == Similarity.ivfTombstonesSchema)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("ivfCompact: copying clean cells answers like the full rewrite, with and without tombstones") {
+    val e = ivfFixture()
+    val q = e.where(col("vec_id") % 12 < 2)
+    val cents = Similarity.kmeansCentroids(e, "vec_id", "embedding", nlist = 8, iters = 4)
+    val tmp = java.nio.file.Files.createTempDirectory("ivfcopy").toString
+    // the rewrite-every-cell compaction ivfCompact replaced
+    def rewrite(dir: String, newDir: String): Unit = {
+      val cells = spark.read.parquet(s"$dir/cells")
+      val live =
+        if (!new java.io.File(s"$dir/tombstones").exists) cells
+        else cells.join(spark.read.parquet(s"$dir/tombstones").select("id"), Seq("id"), "left_anti")
+      live.write.mode("overwrite").partitionBy("cell").parquet(s"$newDir/cells")
+      spark.read.parquet(s"$dir/centroids").write.mode("overwrite").parquet(s"$newDir/centroids")
+    }
+    def topK(dir: String): Set[(Long, Int, Long, Double)] =
+      Similarity.ivfIndexTopK(spark, dir, q, "vec_id", "embedding", 5, nprobe = 2)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    def cellRows(dir: String): Set[(Long, Long, Seq[Double])] =
+      spark.read.parquet(s"$dir/cells").select(col("cell").cast("long"), col("id"), col("nv"))
+        .as[(Long, Long, Seq[Double])].collect().toSet
+    def files(dir: String, cell: String): Set[String] =
+      Option(new java.io.File(s"$dir/cells/$cell").list()).toSet.flatten
+        .filter(_.endsWith(".parquet"))
+    try {
+      val dir = tmp + "/v0"
+      Similarity.ivfIndexWrite(e.where(col("vec_id") < 60), "vec_id", "embedding", cents, dir)
+      Similarity.ivfIndexAppend(e.where(col("vec_id") >= 60), "vec_id", "embedding", dir)
+      Similarity.ivfCompact(spark, dir, tmp + "/copy0")
+      rewrite(dir, tmp + "/rewrite0")
+      assert(topK(tmp + "/copy0") == topK(tmp + "/rewrite0") &&
+        topK(tmp + "/copy0") == topK(dir))
+      assert(cellRows(tmp + "/copy0") == cellRows(tmp + "/rewrite0"))
+      val cellNames = new java.io.File(dir + "/cells").list().filter(_.startsWith("cell=")).sorted
+      assert(cellNames.length > 1)
+      assert(cellNames.forall(c => files(dir, c) == files(tmp + "/copy0", c)),
+        "with no tombstones every cell is copied file by file")
+      // tombstone two vectors of ONE cell: that cell is rewritten, the rest copied
+      val byCell = spark.read.parquet(dir + "/cells").select(col("cell").cast("long"), col("id"))
+        .as[(Long, Long)].collect().groupBy(_._1)
+      val (dirtyCell, members) = byCell.filter(_._2.length > 2).minBy(_._1)
+      Similarity.ivfIndexDelete(members.take(2).map(_._2).toSeq.toDF("vec_id"), "vec_id", dir)
+      Similarity.ivfCompact(spark, dir, tmp + "/copy1")
+      rewrite(dir, tmp + "/rewrite1")
+      val live = topK(tmp + "/copy1")
+      assert(live == topK(tmp + "/rewrite1") && live == topK(dir))
+      assert(cellRows(tmp + "/copy1") == cellRows(tmp + "/rewrite1"))
+      assert(!cellRows(tmp + "/copy1").exists(r => members.take(2).exists(_._2 == r._2)))
+      assert(files(tmp + "/copy1", s"cell=$dirtyCell").intersect(files(dir, s"cell=$dirtyCell")).isEmpty,
+        "the dirty cell must be rewritten")
+      assert(cellNames.filter(_ != s"cell=$dirtyCell")
+        .forall(c => files(dir, c) == files(tmp + "/copy1", c)), "clean cells must be copied")
+      assert(!new java.io.File(tmp + "/copy1/tombstones").exists)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
 }

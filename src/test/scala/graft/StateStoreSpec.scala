@@ -44,6 +44,61 @@ class StateStoreSpec extends AnyFunSuite {
       "replayed publish must not change state content")
   }
 
+  test("read and readBefore pass the recorded schema: inferred rows and schema, zero Spark jobs") {
+    val root = Files.createTempDirectory("stateschema").toString
+    try {
+      // array and struct columns, so a nullability mismatch would show
+      def wide(b: Int, n: Int): DataFrame = delta(b, n)
+        .withColumn("toks", array(col("h"), lit("x")))
+        .withColumn("meta", struct(col("doc_id").as("d"), lit(b).as("b")))
+      StateStore.publishBatch(wide(-1, 0), root, -1) // day-0 empty
+      StateStore.publishBatch(wide(0, 5), root, 0)
+      StateStore.publishBatch(wide(1, 7), root, 1)
+      StateStore.compact(spark, root, uptoBatch = 0)
+      assert(new java.io.File(root, "_schema.json").isFile)
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      def opened(): Seq[DataFrame] = {
+        sc.addSparkListener(listener)
+        try {
+          org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+          jobs.set(0)
+          val frames = Seq(StateStore.read(spark, root),
+            StateStore.readBefore(spark, root, 1),
+            StateStore.readBefore(spark, root, 2))
+          frames.foreach(_.schema)
+          org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+          frames
+        } finally sc.removeSparkListener(listener)
+      }
+      def rows(df: DataFrame): Seq[String] =
+        df.collect().map(_.toString).sorted.toSeq
+      val inferred = spark.read.parquet(root)
+      val want = Seq(inferred, inferred.where(col("batch") < 1),
+        inferred.where(col("batch") < 2)).map(_.drop("batch"))
+      val got = opened()
+      assert(jobs.get == 0, s"known-schema reads launched ${jobs.get} jobs")
+      got.zip(want).foreach { case (g, w) =>
+        assert(g.schema == w.schema)
+        assert(rows(g) == rows(w))
+      }
+      assert(rows(got(1)).length == 5 && rows(got(0)).length == 12)
+      // a root without the sidecar (an older writer's) still reads, by inference
+      new java.io.File(root).listFiles()
+        .filter(_.getName.contains("_schema.json")).foreach(_.delete())
+      val legacy = opened()
+      assert(jobs.get > 0, "an inferred read is expected to launch a job")
+      legacy.zip(want).foreach { case (g, w) =>
+        assert(g.schema == w.schema && rows(g) == rows(w))
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
   test("compact folds committed partitions into one generation; content exact; replay still safe") {
     val root = Files.createTempDirectory("state").toString
     StateStore.publishBatch(delta(-1, 3), root, -1)
