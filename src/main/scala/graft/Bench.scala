@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import scala.util.control.NonFatal
 
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -22,14 +23,18 @@ object Bench {
       try spark.read.parquet(s"$sfDir/$t.parquet").limit(1000)
         .groupBy(org.apache.spark.sql.functions.spark_partition_id())
         .count().count()
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) =>
+        System.err.println(s"warm-up read of $t failed: ${e.getClass.getName}")
+      }
     }
     try {
       import org.apache.spark.sql.expressions.Window
       spark.range(1000)
         .withColumn("r", org.apache.spark.sql.functions.row_number()
           .over(Window.orderBy(col("id")))).count()
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"window warm-up failed: ${e.getClass.getName}")
+    }
     // optional comma-separated subset + repeat count for local iteration.
     // reps > 1 reports the min of COLD runs: state is reset (cache cleared,
     // RDDs unpersisted) before every rep, so min-of-N is comparable to the
@@ -103,7 +108,8 @@ object Bench {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           Some((System.nanoTime() - t0) / 1e9)
         } catch {
-          case _: Throwable =>
+          case NonFatal(e) =>
+            System.err.println(s"$name failed: ${e.getClass.getName}: ${e.getMessage}")
             if (!failed.contains(name)) failed ::= name
             None
         }
@@ -167,8 +173,9 @@ object Bench {
       case Some(path) =>
         try java.nio.file.Files.writeString(
           java.nio.file.Paths.get(path), json + "\n")
-        catch { case e: Throwable =>
-          System.err.println(s"BENCH_LOCAL write failed: ${e.getMessage}")
+        catch { case NonFatal(e) =>
+          System.err.println(
+            s"BENCH_LOCAL write failed: ${e.getClass.getName}: ${e.getMessage}")
         }
       case None =>
         System.err.println(

@@ -7,9 +7,9 @@ import scala.util.control.NonFatal
 /** Engine-wide tuning knobs read from the environment. */
 object Conf {
 
-  /** Engine session defaults shared by every entrypoint (Bench, Verify,
-    * CheckOne, JobProfile, DumpPlans, StreamBench, DocBench) so bench and
-    * verify always execute under the SAME engine configuration:
+  /** Engine session defaults shared by every session builder (the mains,
+    * the fixture builders and the test session) so bench, verify and tests
+    * always execute under the SAME engine configuration:
     *
     *  - checkpoint-file checksums OFF by default (r14: Spark 4.1 writes +
     *    awaits a companion checksum file for EVERY checkpoint/state file —
@@ -30,6 +30,22 @@ object Conf {
     *    `SPARK_GRAFT_ADVISORY_PARTITION_BYTES`) for cluster tuning. The
     *    foreachBatch pipeline drains ignore the first knob: they always
     *    run `parallelismFirst=false` (StreamQueries.withBatchCoalesce).
+    *  - Spark's generated-class cache (`spark.sql.codegen.cache.maxEntries`)
+    *    holds 1000 classes instead of Spark's 100. The working set is
+    *    larger than 100: with Spark's `CodegenMetrics` counted per unit of
+    *    the seeded benchmark, one unit of the unkeyed trade lineage
+    *    (ingest → bars → DSL features → EW σ → CUSUM → triple-barrier
+    *    labels → weights) compiles about 240 classes and one two-batch
+    *    corpus drain about 270, so at 100 entries every repeated lineage,
+    *    micro-batch or oracle rep evicted what the one before compiled and
+    *    compiled it all again. At 1000 (about 4× one unit) a repeated unit
+    *    compiles 16–30 (trade lineage) and 9–42 (corpus) classes — those
+    *    whose code embeds a data-derived literal — and the cache grows the
+    *    heap by a few MB. It is a constant, not an env var or option:
+    *    the cache is static, sized once per JVM when `CodeGenerator` first
+    *    loads, so only the FIRST session built in a JVM decides it and a
+    *    setting on any later session does nothing. Every session builder in
+    *    the repo goes through this function for that reason.
     *
     * Returns the builder for chaining.
     */
@@ -41,6 +57,7 @@ object Conf {
         sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
         sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
+      .config("spark.sql.codegen.cache.maxEntries", 1000L)
 
   /** Streaming STATE partition count for the gate fixtures, resolved once
     * per session from the input volume (guide §2: make partitioning

@@ -48,12 +48,10 @@ object DocFixture {
     // arrays per candidate (~n²/keyspace pairs) — 200k keeps the 8-core
     // run in minutes while the mega-bucket skew story is unchanged
     val nRepEmb = args.lift(3).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
+    val spark = Conf.engineDefaults(SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     spark.read.parquet(s"$src/documents.parquet")

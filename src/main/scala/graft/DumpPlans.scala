@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Dev scratch: dump `.explain("formatted")` for a list of queries to
   * files — `runMain graft.DumpPlans <sfDir> <outDir> <suffix> <q1,q2,...>`
@@ -28,8 +29,8 @@ object DumpPlans {
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
         println(s"dumped $name")
-      } catch { case e: Throwable =>
-        System.err.println(s"[plans] $name failed: ${e.getMessage}")
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[plans] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
     }
     spark.stop()

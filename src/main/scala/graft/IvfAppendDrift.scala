@@ -26,12 +26,10 @@ object IvfAppendDrift {
     val nQueries = 64
     val nlist = 64
     val nprobe = 16
-    val spark = SparkSession.builder()
+    val spark = Conf.engineDefaults(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val e = spark.read.parquet(s"$fixture/embeddings.parquet")

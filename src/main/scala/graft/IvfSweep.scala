@@ -28,12 +28,10 @@ object IvfSweep {
       .split(",").toSeq.map { s =>
         val Array(a, b) = s.trim.split(":"); (a.toInt, b.toInt)
       }
-    val spark = SparkSession.builder()
+    val spark = Conf.engineDefaults(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val e = spark.read.parquet(s"$fixture/embeddings.parquet")
       .persist(Conf.storageLevel)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev tool: sweep every SparkEntry query's physical plan for scale
   * anti-patterns. Not part of the driver contract — run with
@@ -14,12 +15,10 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
+    val spark = Conf.engineDefaults(SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // A BNLJ is sanctioned only as the scalar crossJoin(broadcast(1-row
     // agg)) pattern: Cross type AND a keyless aggregate somewhere in the
@@ -151,7 +150,7 @@ object PlanAudit {
         if (hits.exists(!_.endsWith("[allowed]"))) bad += 1
         println(s"AUDIT $name: $verdict")
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           bad += 1
           println(s"AUDIT $name: ERROR ${e.getClass.getSimpleName}")
       }

@@ -23,12 +23,10 @@ object SeriesFixture {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("target/seriesfix")
     val nCopies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
+    val spark = Conf.engineDefaults(SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val e = Tables.events(spark, src)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))

@@ -3,6 +3,7 @@ package graft
 import graft.features.Scan
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Key-skew resilience harness — the 100 TB question the uniform
   * [[SymBench]] fixture can't ask: real trade corpora have heavy-hitter
@@ -59,12 +60,10 @@ object SkewBench {
     val fixtures = Seq("uniform" -> "target/skewfix_uniform",
       "skew" -> "target/skewfix_skew")
     val rowsPerFixture: Long = {
-      val spark = SparkSession.builder()
+      val spark = Conf.engineDefaults(SparkSession.builder()
         .master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+        .config("spark.ui.enabled", "false")).getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       val base = graft.trades.Trades.fromEvents(Tables.events(spark, sfDir))
         .select("ts", "id", "price", "qty", "symbol")
@@ -90,12 +89,10 @@ object SkewBench {
     // pick-to-cell attribution)
     val autoPicks = scala.collection.mutable.LinkedHashMap[String, String]()
     val runs = cpuList.map { cpus =>
-      val spark = SparkSession.builder()
+      val spark = Conf.engineDefaults(SparkSession.builder()
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+        .config("spark.ui.enabled", "false")).getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
 
       def seqLayout(t: DataFrame): DataFrame =
@@ -192,7 +189,9 @@ object SkewBench {
       layouts.foreach { case (_, mk) =>
         try mk(spark.read.parquet(fixtures.head._2).limit(50000))
           .select(count(col("ewma"))).first()
-        catch { case _: Throwable => }
+        catch { case NonFatal(e) =>
+          System.err.println(s"warm-up layout failed: ${e.getClass.getName}")
+        }
       }
       val cells = for {
         (kind, path) <- fixtures

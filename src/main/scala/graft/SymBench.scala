@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Key-dimension scaling harness: runs the per-symbol (`_sym`) gate queries
   * and their single-series counterparts at several local[N] core counts,
@@ -65,18 +66,18 @@ object SymBench {
     // data (AQE coalesces back); SPARK_GRAFT_SYM_SHUFFLE is that knob here.
     val shuffleParts = sys.env.get("SPARK_GRAFT_SYM_SHUFFLE").map(_.trim.toInt)
     val runs = cpuList.map { cpus =>
-      val spark = SparkSession.builder()
+      val spark = Conf.engineDefaults(SparkSession.builder()
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", shuffleParts.getOrElse(cpus))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+        .config("spark.ui.enabled", "false")).getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       // warm the JIT on an untimed query so core-count runs compare plans,
       // not JVM state (first run of the JVM pays codegen + classloading)
       try SparkEntry.queries("time_bars_5m")(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) =>
+        System.err.println(s"warm-up query failed: ${e.getClass.getName}")
+      }
       // failures are tracked, not swallowed: a missing query name or dataset
       // would otherwise report its time-to-exception as a legitimate scaling
       // number. Failed queries are dropped from the timings and listed.
@@ -101,7 +102,8 @@ object SymBench {
               .write.format("noop").mode("overwrite").save()
             Some((System.nanoTime() - t0) / 1e9)
           } catch {
-            case _: Throwable =>
+            case NonFatal(e) =>
+              System.err.println(s"$n failed: ${e.getClass.getName}: ${e.getMessage}")
               if (!failedHere.contains(n)) failedHere ::= n
               None
           }

@@ -22,12 +22,10 @@ object SymFixture {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("target/symfix")
     val nSym = args.lift(2).map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder()
+    val spark = Conf.engineDefaults(SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.events(spark, src)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))

@@ -153,7 +153,10 @@ object Scan {
   }
 
   /** True when the frame's lineage contains an operator that executes as a
-    * shuffle (join / aggregate / window / global sort / repartition). A
+    * shuffle (join / aggregate / window / global sort / repartition), or
+    * may: a frame built over an RDD (`createDataFrame(rdd, …)`, including
+    * the output of [[affine]] itself and of `Dsl.build`) is a leaf whose
+    * RDD lineage the logical plan cannot see, so it counts as shuffled. A
     * shuffled lineage can replay rows in a DIFFERENT order when a lost
     * block recomputes (map-output fetch order is nondeterministic), which
     * breaks [[affine]]'s cached two-phase layout contract — such inputs
@@ -161,9 +164,11 @@ object Scan {
     */
   private[graft] def lineageHasShuffle(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
     df.queryExecution.optimizedPlan.exists {
       case _: Aggregate | _: Join | _: Window | _: Sort => true
       case _: RepartitionOperation => true
+      case _: LogicalRDD | _: ExternalRDD[_] => true
       case _ => false
     }
   }
@@ -232,8 +237,9 @@ object Scan {
     *                (ts, id) — asserted during phase A (duplicates would
     *                make the sort order nondeterministic under recompute).
     *                AUTO-SELECTED (even when passed false) whenever the
-    *                input lineage contains a shuffle and the order keys are
-    *                integral: a recomputed shuffle replays rows in
+    *                input lineage contains a shuffle, or is a frame over
+    *                an RDD (see [[lineageHasShuffle]]), and the order keys
+    *                are integral: a recomputed shuffle replays rows in
     *                nondeterministic order, so the cached path's layout
     *                contract cannot be trusted there.
     */

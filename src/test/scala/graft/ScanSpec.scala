@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ScanSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   import spark.implicits._
 
@@ -544,6 +539,38 @@ class ScanSpec extends AnyFunSuite {
       // affine maps compose in a different association order than the
       // sequential recursion → ulp-level differences are expected
       assert(math.abs(g - e) <= math.abs(e) * 1e-12, s"row $i: $g vs $e")
+    }
+  }
+
+  test("lineageHasShuffle flags frames over an RDD, not parquet scans") {
+    import graft.features.Scan
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("ts", LongType),
+      StructField("id", LongType), StructField("price", DoubleType)))
+    // the shuffle lives inside the RDD, where the logical plan cannot see it
+    val shuffled = spark.sparkContext.parallelize(0 until 300, 4)
+      .map(i => (i % 7, i)).groupByKey(3)
+      .flatMap { case (_, is) => is.map(i => Row(i.toLong * 1000L, i.toLong, 1.0 + i % 5)) }
+    val overRdd = spark.createDataFrame(shuffled, schema)
+    assert(Scan.lineageHasShuffle(overRdd))
+    assert(Scan.lineageHasShuffle(overRdd.select("ts", "id")))
+    val dir = java.nio.file.Files.createTempDirectory("lineage").resolve("t").toString
+    try {
+      overRdd.write.parquet(dir)
+      val scanned = spark.read.parquet(dir)
+      assert(!Scan.lineageHasShuffle(scanned), "a parquet scan must not flag")
+      assert(!Scan.lineageHasShuffle(scanned.where(col("id") > 3)))
+      // the auto-pinned scan over the RDD-backed frame matches the cached
+      // one over the same rows read back from parquet (the two layouts may
+      // group the affine folds differently: ulp-level differences only)
+      def ewm(df: DataFrame): Seq[Double] =
+        Ewm.ewmaExact(df, "price", 10).orderBy("ts").select("ewma").as[Double].collect().toSeq
+      val (a, b) = (ewm(overRdd), ewm(scanned))
+      assert(a.size == 300 && b.size == 300)
+      a.zip(b).foreach { case (x, y) => assert(math.abs(x - y) <= math.abs(y) * 1e-12, s"$x vs $y") }
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir).getParentFile)
     }
   }
 

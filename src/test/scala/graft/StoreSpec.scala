@@ -10,12 +10,7 @@ import java.nio.file.Files
 /** Round-trip + pruning tests for the partitioned store (SURVEY.md §2.1/M6). */
 class StoreSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   import spark.implicits._
 
