@@ -101,9 +101,9 @@ object Conf {
       .getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
   /** Storage level for the engine's internal persists: the per-event TBM
-    * table, the cached event-weights tables, and the affine scan's sorted
-    * layout. MEMORY_AND_DISK by default (local iteration); set
-    * `SPARK_GRAFT_STORAGE=DISK_ONLY` when the cached tables approach
+    * table and the cached event-weights tables. MEMORY_AND_DISK by
+    * default (local iteration); set `SPARK_GRAFT_STORAGE=DISK_ONLY`
+    * when the cached tables approach
     * executor memory (TB-scale inputs) so the persists never compete with
     * shuffle/aggregation working memory — SYM_SCALING.json records the
     * 256-symbol fixture run certifying the chain under that setting.

@@ -1,6 +1,6 @@
 package graft.features
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import Scan.Affine
 
@@ -9,8 +9,9 @@ import Scan.Affine
   *
   * Exact variants run on [[Scan.affine]] — every recursion here is a vector
   * of independent scalar-affine updates, so the distributed two-pass scan
-  * reproduces the reference's sequential kernels bit-for-bit at any
-  * partition count:
+  * reproduces the reference's sequential kernels to the last few ulps at
+  * any partition count (the composed maps group the products differently),
+  * and bit-for-bit across runs over the same data and partition count:
   *
   *   ewma  (core/ma.py:6-43):           u' = q·u + y ; v' = q·v + 1
   *   ewms  (core/volatility.py:9-69):   S_w' = q·S_w + 1 ; S_w2' = q²·S_w2 + 1
@@ -43,9 +44,7 @@ object Ewm {
                 keyCols: Seq[String] = Nil): DataFrame = {
     val q = 1.0 - 2.0 / (span + 1.0)
     val vIdx = df.schema.fieldIndex(valueCol)
-    val kIdxs = keyCols.map(df.schema.fieldIndex)
-    def newKey(r: Row, prev: Row): Boolean =
-      kIdxs.nonEmpty && (prev == null || kIdxs.exists(i => prev.get(i) != r.get(i)))
+    val newKey = Scan.keyChanged(df.schema, keyCols)
     Scan.affine(
       df, keyCols ++ Seq("ts", "id"), nStates = 2,
       coefs = (r, prev) => {
@@ -71,9 +70,7 @@ object Ewm {
                 keyCols: Seq[String] = Nil): DataFrame = {
     val q = 1.0 - 2.0 / (span + 1.0)
     val vIdx = df.schema.fieldIndex(valueCol)
-    val kIdxs = keyCols.map(df.schema.fieldIndex)
-    def newKey(r: Row, prev: Row): Boolean =
-      kIdxs.nonEmpty && (prev == null || kIdxs.exists(i => prev.get(i) != r.get(i)))
+    val newKey = Scan.keyChanged(df.schema, keyCols)
     Scan.affine(
       df, keyCols ++ Seq("ts", "id"), nStates = 4,
       coefs = (r, prev) => {

@@ -1,7 +1,10 @@
 package graft.features
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftSqlBridge, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  GenericInternalRow, InterpretedOrdering, JoinedRow, SortOrder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,9 +17,11 @@ import org.apache.spark.sql.types._
   *     recurrences s' = a·s + b per state component (EWMA/EWMS/EWMST,
   *     steady-state Wilder). Affine maps compose associatively, so each
   *     range partition summarizes itself in O(1) state, a driver fold
-  *     stitches boundaries, and a second pass emits — two passes, no global
-  *     sort, scales to any data size (the per-partition summary is 2 doubles
-  *     per state component).
+  *     stitches boundaries, and a second pass emits — two passes over one
+  *     frozen range layout, no global sort, scales to any data size (the
+  *     per-partition summary is 2 doubles per state component). The
+  *     passes run on `InternalRow`; [[affine2]] chains two such scans and
+  *     [[withPrevRow]] threads the previous row with no state.
   *
   *  2. [[keyOrdered]] + a caller's `mapPartitions` kernel — for
   *     reset-on-trigger state machines (CUSUM filter/indexer, volume/dollar
@@ -85,8 +90,6 @@ object Scan {
     def invalidate(): Unit = cache.clear()
   }
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Layout a frame so each key's rows are contiguous and ordered: shuffle
     * by key, sort (key, order...) within partitions. A sequential kernel can
     * then stream each key-run with O(1) memory.
@@ -152,27 +155,6 @@ object Scan {
     }(Encoders.row(outSchema)).toDF()
   }
 
-  /** True when the frame's lineage contains an operator that executes as a
-    * shuffle (join / aggregate / window / global sort / repartition), or
-    * may: a frame built over an RDD (`createDataFrame(rdd, …)`, including
-    * the output of [[affine]] itself and of `Dsl.build`) is a leaf whose
-    * RDD lineage the logical plan cannot see, so it counts as shuffled. A
-    * shuffled lineage can replay rows in a DIFFERENT order when a lost
-    * block recomputes (map-output fetch order is nondeterministic), which
-    * breaks [[affine]]'s cached two-phase layout contract — such inputs
-    * default to pinned mode instead of relying on caller opt-in.
-    */
-  private[graft] def lineageHasShuffle(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
-    df.queryExecution.optimizedPlan.exists {
-      case _: Aggregate | _: Join | _: Window | _: Sort => true
-      case _: RepartitionOperation => true
-      case _: LogicalRDD | _: ExternalRDD[_] => true
-      case _ => false
-    }
-  }
-
   /** One scalar-affine state component: s' = a·s + b. */
   final case class Affine(a: Double, b: Double) {
     /** Composition: apply `this` AFTER `prev`. */
@@ -180,306 +162,117 @@ object Scan {
     def apply(s: Double): Double = a * s + b
   }
 
+
+  /** Catalyst's ascending order (nulls first) over `cols` of `schema`'s
+    * rows: the order the scan layout sorts by. Two rows compare equal
+    * exactly when they agree on `cols`.
+    */
+  private[graft] def ordering(schema: StructType, cols: Seq[String]): Ordering[InternalRow] =
+    new InterpretedOrdering(cols.map { c =>
+      val i = schema.fieldIndex(c)
+      SortOrder(BoundReference(i, schema(i).dataType, schema(i).nullable), Ascending)
+    })
+
+  /** Key-run start test for reset-at-key scans over `schema`'s rows: true
+    * when `keyCols` is non-empty and the row is the scan's first (`prev`
+    * null) or differs from `prev` on a key column (nulls equal).
+    */
+  private[graft] def keyChanged(schema: StructType, keyCols: Seq[String])
+      : (InternalRow, InternalRow) => Boolean =
+    if (keyCols.isEmpty) (_, _) => false
+    else {
+      val ord = ordering(schema, keyCols)
+      (r, prev) => prev == null || ord.compare(r, prev) != 0
+    }
+
   /** Exact distributed scan for a vector of independent scalar-affine
-    * recurrences over a globally `orderCol`-ordered frame.
+    * recurrences over a globally `orderCols`-ordered frame.
     *
-    * COST NOTE (pinned / auto-pinned mode): the range bounds are sampled
-    * from a column-pruned projection of `df` BEFORE the main shuffle pass —
-    * the input lineage is evaluated TWICE (once to sample bounds, once to
-    * shuffle). When the upstream chain is expensive, persist `df` first (or
-    * pass a cheap equivalent); the sample projection reads only the order
-    * keys, so a persisted input makes the extra pass near-free.
+    * LAYOUT. Every scan here reads one frozen range layout:
+    *  - the input executes once, through its `queryExecution.toRdd` (AQE
+    *    materializes every exchange of the input there); the bound sample
+    *    and the routing shuffle both read that RDD;
+    *  - the bounds are a pure function of the order-key multiset: the
+    *    64·parts keys with the smallest xxhash64, sorted, then evenly
+    *    spaced picks. They enter the plan as struct literals;
+    *  - rows route with `repartitionById` on a binary search over the
+    *    bounds, in Catalyst's own order (the one `sortWithinPartitions`
+    *    uses), into `spark.sql.shuffle.partitions` partitions (`numParts`
+    *    overrides), each sorted by `orderCols`;
+    *  - that frame is read through ONE `queryExecution.toRdd`, so every
+    *    pass re-reads the same shuffle files. Nothing is persisted.
+    * Partition membership is a pure function of the key, and with unique
+    * order keys so is the order within a partition: a recompute after
+    * block loss rebuilds the exact layout the earlier passes saw, and two
+    * runs over the same data compose their affine maps in the same
+    * grouping, so they return bit-identical doubles. Order keys must be
+    * UNIQUE (asserted in phase A); any orderable types work.
     *
-    * @param coefs   per-row affine coefficients for each state component;
-    *                receives the row and the previous row (null for the
-    *                partition's first row — resolved exactly via the
-    *                boundary handoff, see `prevFields`)
+    * PASSES. Phase A collects per partition the first row, the last row
+    * and the composed map of rows[1..]; a driver fold replays each first
+    * row with its true predecessor (coefficients may read the previous
+    * row, e.g. Δt decay) and yields every partition's incoming state;
+    * phase B replays each partition from it and emits. All passes run on
+    * `InternalRow`, and the output returns as an `InternalRow` frame.
+    *
+    * @param coefs   per-row coefficients of each state component from the
+    *                row and the previous row (null before the scan's first)
     * @param init    initial state vector
-    * @param emit    output value from (stateAfterUpdate, row)
-    *                (coefficients MAY depend on the previous row, e.g. Δt
-    *                decay: each partition's first row is always excluded
-    *                from the phase-A summary and replayed on the driver
-    *                with its true neighbor — there is no opt-out flag)
-    * @param numParts scan partitions; <= 0 (default) derives from the input
-    *                (max of cluster parallelism and input partitions) so the
-    *                scan widens with data instead of pinning 32
-    * @param storage persistence for the sorted frame both phases must see
-    *                identically (phase B replays phase A's exact layout —
-    *                a recompute with different row order would break the
-    *                boundary handoff). Defaults to [[graft.Conf.storageLevel]]
-    *                (MEMORY_AND_DISK; SPARK_GRAFT_STORAGE=DISK_ONLY at TB
-    *                scale so the scan never competes with the executors'
-    *                working memory). On a cluster, a lost
-    *                persisted block recomputes from lineage: the range
-    *                sampler's seed is deterministic per partition index, so
-    *                the rebuilt layout is identical PROVIDED `df`'s own
-    *                lineage is deterministic (scans + narrow ops are; an
-    *                upstream shuffle with nondeterministic row order is
-    *                not — checkpoint such inputs first, or set `pinned`).
-    *                The persisted layout stays registered after the scan
-    *                (phase B reads it lazily); long-running sessions
-    *                issuing many cached-mode scans should
-    *                `spark.catalog.clearCache()` between batches — the
-    *                pinned mode (and every auto-pinned scan) persists
-    *                nothing.
-    * @param pinned  fully deterministic mode: nothing is persisted; the
-    *                input is shuffled ONCE through a FROZEN partitioner
-    *                (range bounds sampled a single time on the driver, then
-    *                plain constants) and sorted by the unique order keys, so
-    *                partition membership is a pure function of the key and
-    *                the within-partition order is total — a recompute after
-    *                block loss provably rebuilds phase A's exact layout even
-    *                if the upstream shuffle replays rows in a different
-    *                order. Phase B reuses the same shuffle files (the map
-    *                stage is skipped), so exactness costs ONE shuffle —
-    *                the choice at TB scale when the input lineage is not
-    *                deterministic. Requires non-null, UNIQUE order keys
-    *                (ts, id) — asserted during phase A (duplicates would
-    *                make the sort order nondeterministic under recompute).
-    *                AUTO-SELECTED (even when passed false) whenever the
-    *                input lineage contains a shuffle, or is a frame over
-    *                an RDD (see [[lineageHasShuffle]]), and the order keys
-    *                are integral: a recomputed shuffle replays rows in
-    *                nondeterministic order, so the cached path's layout
-    *                contract cannot be trusted there.
+    * @param emit    the output value, a Catalyst internal value of
+    *                `outType` (a boxed primitive, `InternalRow` for a
+    *                struct, null), from (stateAfterUpdate, row)
+    * @param numParts scan partitions; <= 0 (default) reads
+    *                `spark.sql.shuffle.partitions`
     */
   def affine(
       df: DataFrame,
       orderCols: Seq[String],
       nStates: Int,
-      coefs: (Row, Row) => Array[Affine],
+      coefs: (InternalRow, InternalRow) => Array[Affine],
       init: Array[Double],
-      emit: (Array[Double], Row) => Any,
+      emit: (Array[Double], InternalRow) => Any,
       outName: String,
       outType: DataType = DoubleType,
-      numParts: Int = 0,
-      storage: org.apache.spark.storage.StorageLevel = graft.Conf.storageLevel,
-      pinned: Boolean = false): DataFrame =
-    affineWithFinal(df, orderCols, nStates, coefs, init, emit, outName,
-      outType, numParts, storage, pinned)._1
+      numParts: Int = 0): DataFrame =
+    scan(df, orderCols, numParts, unique = true, outName, outType,
+      nStates, coefs, init, 0, noStage2, Array.emptyDoubleArray,
+      (s, _, r, _, _) => emit(s, r))._1
 
-  /** [[affine]] + the scan's FINAL state vector (the driver fold already
-    * computes it for free — it is the state after the last row). Callers
-    * that need a global total alongside the prefix scan (e.g. time-decay
-    * weights: cum and Σ of the same column) read it here instead of paying
-    * a second aggregation pass.
+  /** [[affine]] + the scan's FINAL state vector (the state after the last
+    * row, which the driver fold computes before phase B). `emit` receives
+    * it as its third argument, so an output that needs a global total
+    * alongside the prefix (e.g. time-decay weights: cum and Σ of the same
+    * column) is computed in the replay, with no second aggregation pass
+    * and no data-derived literal in the plan.
     */
   private[graft] def affineWithFinal(
       df: DataFrame,
       orderCols: Seq[String],
       nStates: Int,
-      coefs: (Row, Row) => Array[Affine],
+      coefs: (InternalRow, InternalRow) => Array[Affine],
       init: Array[Double],
-      emit: (Array[Double], Row) => Any,
+      emit: (Array[Double], InternalRow, Array[Double]) => Any,
       outName: String,
       outType: DataType = DoubleType,
-      numParts: Int = 0,
-      storage: org.apache.spark.storage.StorageLevel = graft.Conf.storageLevel,
-      pinned: Boolean = false): (DataFrame, Array[Double]) = {
-
-    val parts =
-      if (numParts > 0) numParts
-      else math.max(df.sparkSession.sparkContext.defaultParallelism,
-        df.rdd.getNumPartitions)
-    // auto-pin: a shuffle in the input lineage makes the cached layout
-    // untrustworthy under block loss (see `pinned` scaladoc); non-integral
-    // order keys can't pin and keep the cached path (plus its caveats)
-    val integralKeys = orderCols.forall { c =>
-      val dt = df.schema(c).dataType
-      dt == LongType || dt == IntegerType
-    }
-    val autoPinned = !pinned && integralKeys && lineageHasShuffle(df)
-    val usePinned = pinned || autoPinned
-    if (autoPinned)
-      log.info(s"affine scan '$outName': shuffled lineage detected — " +
-        "auto-selecting the pinned (deterministic re-shuffle) layout; " +
-        "order keys must be unique (asserted in phase A)")
-
-    // ---- the ONE layout both phases read --------------------------------
-    // cached mode: DataFrame range shuffle + persist (deterministic-lineage
-    //   caveat in the `storage` scaladoc). pinned mode: a single RDD shuffle
-    //   through a frozen partitioner; phase B re-reads the same shuffle
-    //   files, so no second shuffle is paid.
-    val keyIdxs = orderCols.map(df.schema.fieldIndex).toArray
-    val layout: org.apache.spark.rdd.RDD[Row] =
-      if (usePinned) pinnedLayoutRdd(df, orderCols, parts)
-      else
-        df.repartitionByRange(parts, orderCols.map(col): _*)
-          .sortWithinPartitions(orderCols.map(col): _*).persist(storage)
-          .rdd
-
-    val summaries = phaseASummaries(layout, keyIdxs, nStates, coefs,
-      assertUnique = usePinned, outName, orderCols)
-    val (incomingSeq, prevLastSeq, state) =
-      foldIncoming(summaries, nStates, coefs, init)
-    val m = summaries.length
-
-    val spark = df.sparkSession
-    val outSchema = StructType(df.schema.fields :+ StructField(outName, outType))
-    if (m == 0)
-      return (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema),
-        state)
-
-    // ---- phase B: replay with exact incoming state -----------------------
-    // Reads the SAME layout as phase A: the persisted blocks in cached mode,
-    // the already-written shuffle files in pinned mode (map stage skipped).
-    val bState = spark.sparkContext.broadcast((incomingSeq, prevLastSeq))
-    val replay: (Int, Iterator[Row]) => Iterator[Row] = { (idx, it) =>
-      val (inc, prevArr) = bState.value
-      val st = inc(idx).clone()
-      var prev: Row = prevArr(idx)
-      it.map { r =>
-        val cs = coefs(r, prev)
-        var i = 0
-        while (i < nStates) { st(i) = cs(i)(st(i)); i += 1 }
-        prev = r
-        Row.fromSeq(r.toSeq :+ emit(st, r))
-      }
-    }
-    val pidToIdx = summaries.map(_._1).zipWithIndex.toMap
-    val outRdd = layout.mapPartitionsWithIndex { (pid, it) =>
-      pidToIdx.get(pid) match {
-        case Some(idx) => replay(idx, it)
-        case None      => Iterator.empty // empty in phase A ⇒ empty here
-      }
-    }
-    (spark.createDataFrame(outRdd, outSchema), state)
+      numParts: Int = 0): (DataFrame, Array[Double]) = {
+    val (out, fin, _) = scan(df, orderCols, numParts, unique = true, outName,
+      outType, nStates, coefs, init, 0, noStage2, Array.emptyDoubleArray,
+      (s, _, r, _, f) => emit(s, r, f))
+    (out, fin)
   }
 
-  /** The pinned layout: ONE RDD shuffle through a frozen RangePartitioner
-    * whose bounds are sampled once on the driver and then serialized as
-    * constants into the shuffle dependency — partition membership is a pure
-    * function of the key, independent of upstream row order, so a recompute
-    * after block loss provably rebuilds the same layout. The sampling pass
-    * reads a column-pruned projection of the input (only the order keys):
-    * ANY bounds partition correctly — sampling affects balance, not
-    * membership — so the cheaper evaluation is free accuracy-wise.
-    *
-    * Integral keys only: LexKeyOrdering compares via Java Comparable, which
-    * agrees with Spark's sort order for longs/ints but NOT for strings
-    * (UTF8 byte order vs UTF-16 code units) or doubles (-0.0).
-    */
-  private def pinnedLayoutRdd(df: DataFrame, orderCols: Seq[String],
-                              parts: Int): org.apache.spark.rdd.RDD[Row] = {
-    orderCols.foreach { c =>
-      val dt = df.schema(c).dataType
-      require(dt == LongType || dt == IntegerType,
-        s"pinned affine scan requires integral order keys; '$c' is $dt")
-    }
-    val keyIdxs = orderCols.map(df.schema.fieldIndex).toArray
-    val keyOf = (r: Row) => {
-      val a = new Array[AnyRef](keyIdxs.length)
-      var i = 0
-      while (i < keyIdxs.length) {
-        a(i) = r.get(keyIdxs(i)).asInstanceOf[AnyRef]; i += 1
-      }
-      a
-    }
-    implicit val keyOrd: Ordering[Array[AnyRef]] = new LexKeyOrdering
-    val nKeys = keyIdxs.length
-    val keySample = df.select(orderCols.map(col): _*).rdd.map { r =>
-      val a = new Array[AnyRef](nKeys)
-      var i = 0
-      while (i < nKeys) { a(i) = r.get(i).asInstanceOf[AnyRef]; i += 1 }
-      (a, null)
-    }
-    val partitioner = new org.apache.spark.RangePartitioner(parts, keySample)
-    df.rdd.map(r => (keyOf(r), r))
-      .repartitionAndSortWithinPartitions(partitioner).map(_._2)
-  }
-
-  /** Phase A: per-partition (partId, firstRow, lastRow, composed affine map
-    * of rows[1..]). The first row is excluded because its coefficients may
-    * depend on the previous partition's last row — the driver fold replays
-    * it with the true neighbor. Partition ids are bound with
-    * mapPartitionsWithIndex at the RDD level (not TaskContext
-    * .getPartitionId): a downstream coalesce would fuse several input
-    * partitions into one task and lie about the id. With `assertUnique`
-    * the pass also asserts order-key uniqueness (duplicates are adjacent
-    * after the sort, and the partitioner routes equal keys to the same
-    * partition, so an adjacent compare is a complete check).
-    */
-  private def phaseASummaries(layout: org.apache.spark.rdd.RDD[Row],
-      keyIdxs: Array[Int], nStates: Int, coefs: (Row, Row) => Array[Affine],
-      assertUnique: Boolean, outName: String, orderCols: Seq[String])
-      : Array[(Int, Row, Row, Array[Affine])] = {
-    val nOrderKeys = keyIdxs.length
-    layout.mapPartitionsWithIndex { (pid, rows) =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val first = rows.next()
-        var prev = first
-        val comp = Array.fill(nStates)(Affine(1.0, 0.0))
-        while (rows.hasNext) {
-          val r = rows.next()
-          if (assertUnique) {
-            var eq = true
-            var i = 0
-            while (eq && i < nOrderKeys) {
-              eq = r.get(keyIdxs(i)) == prev.get(keyIdxs(i)); i += 1
-            }
-            require(!eq, s"pinned affine scan '$outName' requires UNIQUE " +
-              s"order keys, found duplicate (${orderCols.mkString(", ")}) = " +
-              s"(${keyIdxs.map(r.get).mkString(", ")})")
-          }
-          val cs = coefs(r, prev)
-          var i = 0
-          while (i < nStates) { comp(i) = cs(i).after(comp(i)); i += 1 }
-          prev = r
-        }
-        Iterator.single((pid, first, prev, comp))
-      }
-    }.collect().sortBy(_._1)
-  }
-
-  /** Driver fold: incoming state per non-empty partition, in order —
-    * replays each partition's FIRST row (whose coefficients may depend on
-    * the previous partition's last row), then applies the composed map.
-    * Returns (incoming states, previous-partition last rows, final state).
-    */
-  private def foldIncoming(summaries: Array[(Int, Row, Row, Array[Affine])],
-      nStates: Int, coefs: (Row, Row) => Array[Affine], init: Array[Double])
-      : (Array[Array[Double]], Array[Row], Array[Double]) = {
-    val m = summaries.length
-    val incomingSeq = new Array[Array[Double]](m)
-    val prevLastSeq = new Array[Row](m)
-    var state = init.clone()
-    var prevLast: Row = null
-    var si = 0
-    while (si < m) {
-      val (_, first, _, comp) = summaries(si)
-      incomingSeq(si) = state.clone()
-      prevLastSeq(si) = prevLast
-      val cs = coefs(first, prevLast)
-      var i = 0
-      while (i < nStates) { state(i) = cs(i)(state(i)); i += 1 }
-      i = 0
-      while (i < nStates) { state(i) = comp(i)(state(i)); i += 1 }
-      prevLast = summaries(si)._3
-      si += 1
-    }
-    (incomingSeq, prevLastSeq, state)
-  }
-
-  /** TWO chained affine scans sharing ONE pinned layout — for recurrences
-    * whose stage-2 coefficients read a stage-1 state value (e.g. the AFML
+  /** TWO chained affine scans on one layout — for recurrences whose
+    * stage-2 coefficients read a stage-1 state value (e.g. the AFML
     * sample-weight sweep: conc is a running sum, and cum_u accumulates
     * 1/conc — not expressible as independent affine components in one
     * pass, because a per-partition summary of Σ 1/(conc_in + prefix) is
     * not affine in the unknown incoming conc_in).
     *
-    * Exactness costs ONE shuffle and three passes over its files:
-    *   A1  summarize stage 1 (composed maps)      → driver fold 1
+    * One shuffle, three passes over its files:
+    *   A1  summarize stage 1 (composed maps)         → driver fold 1
     *   A2  replay stage 1 exactly, summarize stage 2 → driver fold 2
     *   B   replay both stages, emit
-    * All passes read the same frozen-partitioner shuffle files (map stage
-    * skipped), so recompute after block loss rebuilds the identical layout
-    * — the same determinism contract as pinned [[affine]]. Requires
-    * non-null UNIQUE integral order keys (asserted in A1).
-    *
-    * COST NOTE: as with pinned [[affine]], range bounds are sampled from a
-    * column-pruned projection BEFORE the shuffle — the input lineage is
-    * evaluated twice; persist expensive inputs first.
+    * Same layout and determinism contract as [[affine]].
     *
     * @param coefs1 stage-1 coefficients from (row, prevRow) — prevRow is
     *               null only before the very first row of the scan
@@ -491,12 +284,12 @@ object Scan {
       df: DataFrame,
       orderCols: Seq[String],
       n1: Int,
-      coefs1: (Row, Row) => Array[Affine],
+      coefs1: (InternalRow, InternalRow) => Array[Affine],
       init1: Array[Double],
       n2: Int,
-      coefs2: (Row, Array[Double]) => Array[Affine],
+      coefs2: (InternalRow, Array[Double]) => Array[Affine],
       init2: Array[Double],
-      emit: (Array[Double], Array[Double], Row) => Any,
+      emit: (Array[Double], Array[Double], InternalRow) => Any,
       outName: String,
       outType: DataType,
       numParts: Int = 0): DataFrame =
@@ -505,108 +298,32 @@ object Scan {
 
   /** [[affine2]] + both stages' FINAL state vectors — the driver folds
     * already compute them; callers needing global totals alongside the
-    * prefix scan (e.g. normalization scalars over a decay-weighted column)
-    * read them here instead of paying a separate aggregation pass over the
-    * scan's output lineage.
+    * prefix scan read them here instead of paying a separate aggregation
+    * pass over the scan's output lineage.
     */
   private[graft] def affine2WithFinal(
       df: DataFrame,
       orderCols: Seq[String],
       n1: Int,
-      coefs1: (Row, Row) => Array[Affine],
+      coefs1: (InternalRow, InternalRow) => Array[Affine],
       init1: Array[Double],
       n2: Int,
-      coefs2: (Row, Array[Double]) => Array[Affine],
+      coefs2: (InternalRow, Array[Double]) => Array[Affine],
       init2: Array[Double],
-      emit: (Array[Double], Array[Double], Row) => Any,
+      emit: (Array[Double], Array[Double], InternalRow) => Any,
       outName: String,
       outType: DataType,
-      numParts: Int = 0): (DataFrame, Array[Double], Array[Double]) = {
-    val spark = df.sparkSession
-    val parts =
-      if (numParts > 0) numParts
-      else math.max(spark.sparkContext.defaultParallelism,
-        df.rdd.getNumPartitions)
-    val keyIdxs = orderCols.map(df.schema.fieldIndex).toArray
-    val layout = pinnedLayoutRdd(df, orderCols, parts)
+      numParts: Int = 0): (DataFrame, Array[Double], Array[Double]) =
+    scan(df, orderCols, numParts, unique = true, outName, outType,
+      n1, coefs1, init1, n2, coefs2, init2, (s1, s2, r, _, _) => emit(s1, s2, r))
 
-    val summaries = phaseASummaries(layout, keyIdxs, n1, coefs1,
-      assertUnique = true, outName, orderCols)
-    val (incoming1, prevLast1, fin1) = foldIncoming(summaries, n1, coefs1, init1)
-    val m = summaries.length
-    val outSchema = StructType(df.schema.fields :+ StructField(outName, outType))
-    if (m == 0)
-      return (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema),
-        fin1, init2.clone())
-
-    val b1 = spark.sparkContext.broadcast((incoming1, prevLast1))
-    val pidToIdx = summaries.map(_._1).zipWithIndex.toMap
-
-    // ---- phase A2: exact stage-1 replay, stage-2 composition ------------
-    // incoming1 is exact, so stage-2 coefficients are concrete for EVERY
-    // row — the composed map covers the whole partition (no first-row
-    // exclusion) and fold 2 is a plain map application.
-    val comp2s = layout.mapPartitionsWithIndex { (pid, it) =>
-      pidToIdx.get(pid) match {
-        case None => Iterator.empty
-        case Some(idx) =>
-          val (inc, pl) = b1.value
-          val st1 = inc(idx).clone()
-          var prev: Row = pl(idx)
-          val comp = Array.fill(n2)(Affine(1.0, 0.0))
-          it.foreach { r =>
-            val cs1 = coefs1(r, prev)
-            var i = 0
-            while (i < n1) { st1(i) = cs1(i)(st1(i)); i += 1 }
-            val cs2 = coefs2(r, st1)
-            i = 0
-            while (i < n2) { comp(i) = cs2(i).after(comp(i)); i += 1 }
-            prev = r
-          }
-          Iterator.single((idx, comp))
-      }
-    }.collect().sortBy(_._1)
-
-    val incoming2 = new Array[Array[Double]](m)
-    var st2 = init2.clone()
-    comp2s.foreach { case (idx, comp) =>
-      incoming2(idx) = st2.clone()
-      var i = 0
-      while (i < n2) { st2(i) = comp(i)(st2(i)); i += 1 }
-    }
-
-    // ---- phase B: replay both stages with exact incoming state ----------
-    val b2 = spark.sparkContext.broadcast(incoming2)
-    val outRdd = layout.mapPartitionsWithIndex { (pid, it) =>
-      pidToIdx.get(pid) match {
-        case None => Iterator.empty
-        case Some(idx) =>
-          val (inc, pl) = b1.value
-          val st1 = inc(idx).clone()
-          val s2 = b2.value(idx).clone()
-          var prev: Row = pl(idx)
-          it.map { r =>
-            val cs1 = coefs1(r, prev)
-            var i = 0
-            while (i < n1) { st1(i) = cs1(i)(st1(i)); i += 1 }
-            val cs2 = coefs2(r, st1)
-            i = 0
-            while (i < n2) { s2(i) = cs2(i)(s2(i)); i += 1 }
-            prev = r
-            Row.fromSeq(r.toSeq :+ emit(st1, s2, r))
-          }
-      }
-    }
-    (spark.createDataFrame(outRdd, outSchema), fin1, st2)
-  }
-
-  /** Previous-ROW access over a total integral order, distributed: the
-    * pinned layout's boundary handoff already threads each partition's
-    * predecessor row, so a lag-style operator needs NO affine state at all
-    * — `out(row, prevRow)` sees the exact previous row (null before the
+  /** Previous-ROW access over a total order, distributed: the layout's
+    * boundary handoff already threads each partition's predecessor row,
+    * so a lag-style operator needs NO affine state at all —
+    * `out(row, prevRow)` sees the exact previous row (null before the
     * very first), with full-precision longs (an affine double state would
     * corrupt ns epochs > 2^53). One shuffle, two passes over its files;
-    * requires non-null UNIQUE integral order keys (asserted).
+    * requires UNIQUE order keys (asserted).
     *
     * `allowDupOrderKeys` skips the uniqueness assertion for callers whose
     * OUTPUT is invariant under any permutation of equal-key rows — true
@@ -620,54 +337,171 @@ object Scan {
   private[graft] def withPrevRow(
       df: DataFrame,
       orderCols: Seq[String],
-      out: (Row, Row) => Any,
+      out: (InternalRow, InternalRow) => Any,
       outName: String,
       outType: DataType,
       numParts: Int = 0,
-      allowDupOrderKeys: Boolean = false): DataFrame = {
+      allowDupOrderKeys: Boolean = false): DataFrame =
+    scan(df, orderCols, numParts, unique = !allowDupOrderKeys, outName, outType,
+      0, (_, _) => Array.empty[Affine], Array.emptyDoubleArray,
+      0, noStage2, Array.emptyDoubleArray, (_, _, r, p, _) => out(r, p))._1
+
+  private val noStage2: (InternalRow, Array[Double]) => Array[Affine] =
+    (_, _) => Array.empty[Affine]
+
+  /** s(i) ← maps(i)(s(i)) for every component. */
+  private def advance(maps: Array[Affine], s: Array[Double]): Unit = {
+    var i = 0
+    while (i < s.length) { s(i) = maps(i)(s(i)); i += 1 }
+  }
+
+  /** comp(i) ← maps(i) after comp(i) for every component. */
+  private def compose(maps: Array[Affine], comp: Array[Affine]): Unit = {
+    var i = 0
+    while (i < comp.length) { comp(i) = maps(i).after(comp(i)); i += 1 }
+  }
+
+  /** The engine behind every entry point (passes in [[affine2]]'s
+    * scaladoc; A2 is skipped when `n2` is 0). `emit` reads (state1,
+    * state2, row, prevRow, final state1).
+    */
+  private def scan(
+      df: DataFrame, orderCols: Seq[String], numParts: Int, unique: Boolean,
+      outName: String, outType: DataType,
+      n1: Int, coefs1: (InternalRow, InternalRow) => Array[Affine], init1: Array[Double],
+      n2: Int, coefs2: (InternalRow, Array[Double]) => Array[Affine], init2: Array[Double],
+      emit: (Array[Double], Array[Double], InternalRow, InternalRow, Array[Double]) => Any)
+      : (DataFrame, Array[Double], Array[Double]) = {
     val spark = df.sparkSession
-    val parts =
-      if (numParts > 0) numParts
-      else math.max(spark.sparkContext.defaultParallelism,
-        df.rdd.getNumPartitions)
-    val keyIdxs = orderCols.map(df.schema.fieldIndex).toArray
-    val layout = pinnedLayoutRdd(df, orderCols, parts)
-    val noStates = (_: Row, _: Row) => Array.empty[Affine]
-    val summaries = phaseASummaries(layout, keyIdxs, 0, noStates,
-      assertUnique = !allowDupOrderKeys, outName, orderCols)
-    val (_, prevLastSeq, _) =
-      foldIncoming(summaries, 0, noStates, Array.empty)
-    val outSchema = StructType(df.schema.fields :+ StructField(outName, outType))
-    if (summaries.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
-    val bPrev = spark.sparkContext.broadcast(prevLastSeq)
-    val pidToIdx = summaries.map(_._1).zipWithIndex.toMap
-    val outRdd = layout.mapPartitionsWithIndex { (pid, it) =>
-      pidToIdx.get(pid) match {
-        case None => Iterator.empty
+    val schema = df.schema
+    val outSchema = StructType(schema.fields :+ StructField(outName, outType))
+    val keyOrd = ordering(schema, orderCols)
+    val keyIdxs = orderCols.map(schema.fieldIndex)
+    // the driver-side jobs run as SQL executions of the input, so their
+    // tasks share the session's executor class loader (and with it the
+    // generated-class cache) with every other query of the session
+    def execution[T](body: => T): T =
+      GraftSqlBridge.withExecution(df, s"scan $outName")(body)
+    val rows = execution(layout(df, orderCols, numParts))
+
+    // ---- phase A1: (pid, first row, last row, composed map of rows[1..])
+    val summaries = execution(rows.mapPartitionsWithIndex { (pid, it) =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        val first = it.next().copy()
+        var prev = first
+        val comp = Array.fill(n1)(Affine(1.0, 0.0))
+        while (it.hasNext) {
+          val r = it.next()
+          // equal keys are adjacent after the sort: an adjacent compare
+          // is a complete check
+          require(!unique || keyOrd.compare(r, prev) != 0,
+            s"affine scan '$outName' requires UNIQUE order keys, found " +
+              s"duplicate (${orderCols.mkString(", ")}) = " +
+              s"(${keyIdxs.map(i => r.get(i, schema(i).dataType)).mkString(", ")})")
+          compose(coefs1(r, prev), comp)
+          prev = r.copy()
+        }
+        Iterator.single((pid, first, prev, comp))
+      }
+    }.collect()).sortBy(_._1)
+    val m = summaries.length
+
+    // ---- driver fold 1: incoming stage-1 state and predecessor row of
+    // each non-empty partition, in order
+    val inc1 = new Array[Array[Double]](m)
+    val prevLast = new Array[InternalRow](m)
+    val fin1 = init1.clone()
+    var last: InternalRow = null
+    summaries.indices.foreach { si =>
+      val (_, first, lastRow, comp) = summaries(si)
+      inc1(si) = fin1.clone()
+      prevLast(si) = last
+      advance(coefs1(first, last), fin1)
+      advance(comp, fin1)
+      last = lastRow
+    }
+    if (m == 0)
+      return (GraftSqlBridge.internalDataFrame(spark,
+        spark.sparkContext.emptyRDD[InternalRow], outSchema), fin1, init2.clone())
+    val idxOf = summaries.map(_._1).zipWithIndex.toMap
+
+    // ---- phase A2: exact stage-1 replay, stage-2 composition. inc1 is
+    // exact, so stage-2 coefficients are concrete for EVERY row — the
+    // composed map covers the whole partition and fold 2 is a plain map
+    // application.
+    val fin2 = init2.clone()
+    val inc2 = Array.fill(m)(Array.emptyDoubleArray)
+    if (n2 > 0) {
+      val comps = execution(rows.mapPartitionsWithIndex { (pid, it) =>
+        idxOf.get(pid).iterator.map { idx =>
+          val s1 = inc1(idx).clone()
+          var prev = prevLast(idx)
+          val comp = Array.fill(n2)(Affine(1.0, 0.0))
+          it.foreach { r =>
+            advance(coefs1(r, prev), s1)
+            compose(coefs2(r, s1), comp)
+            prev = r.copy()
+          }
+          (idx, comp)
+        }
+      }.collect()).sortBy(_._1)
+      comps.foreach { case (idx, comp) =>
+        inc2(idx) = fin2.clone()
+        advance(comp, fin2)
+      }
+    }
+
+    // ---- phase B: replay both stages with exact incoming state, emit
+    val out = rows.mapPartitionsWithIndex { (pid, it) =>
+      idxOf.get(pid) match {
+        case None => Iterator.empty // empty in phase A ⇒ empty here
         case Some(idx) =>
-          var prev: Row = bPrev.value(idx)
+          val s1 = inc1(idx).clone()
+          val s2 = inc2(idx).clone()
+          var prev = prevLast(idx)
+          val value = new GenericInternalRow(1)
+          val joined = new JoinedRow
           it.map { r =>
-            val o = out(r, prev)
-            prev = r
-            Row.fromSeq(r.toSeq :+ o)
+            advance(coefs1(r, prev), s1)
+            if (n2 > 0) advance(coefs2(r, s1), s2)
+            value.update(0, emit(s1, s2, r, prev, fin1))
+            prev = r.copy()
+            joined(r, value): InternalRow
           }
       }
     }
-    spark.createDataFrame(outRdd, outSchema)
+    (GraftSqlBridge.internalDataFrame(spark, out, outSchema), fin1, fin2)
   }
 
-  /** Lexicographic ordering over boxed, non-null order-key vectors. */
-  private class LexKeyOrdering extends Ordering[Array[AnyRef]] {
-    def compare(x: Array[AnyRef], y: Array[AnyRef]): Int = {
-      var i = 0
-      while (i < x.length) {
-        val c = x(i).asInstanceOf[Comparable[AnyRef]].compareTo(y(i))
-        if (c != 0) return c
-        i += 1
+  /** The frozen range layout of [[affine]]'s scaladoc, as the RDD every
+    * pass reads.
+    */
+  private def layout(df: DataFrame, orderCols: Seq[String],
+                     numParts: Int): RDD[InternalRow] = {
+    val spark = df.sparkSession
+    val parts =
+      if (numParts > 0) numParts
+      else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val in = GraftSqlBridge.internalDataFrame(spark, df.queryExecution.toRdd, df.schema)
+    val keys = orderCols.map(col)
+    val sample = in.select(keys: _*).orderBy(xxhash64(keys: _*) +: keys: _*)
+      .limit(64 * parts).orderBy(keys: _*).collect()
+    val types = orderCols.map(c => df.schema(c).dataType)
+    val bounds =
+      if (sample.isEmpty) IndexedSeq.empty[Column]
+      else (1 until parts).map(i => sample((i.toLong * sample.length / parts).toInt))
+        .distinct.map(b => struct(orderCols.indices.map(i =>
+          lit(b.get(i)).cast(types(i)).as(orderCols(i))): _*))
+    // partition p holds the keys in (bounds(p - 1), bounds(p)]
+    val key = struct(keys: _*)
+    def pid(lo: Int, hi: Int): Column =
+      if (lo == hi) lit(lo)
+      else {
+        val mid = (lo + hi) / 2
+        when(key <= bounds(mid), pid(lo, mid)).otherwise(pid(mid + 1, hi))
       }
-      0
-    }
+    in.repartitionById(parts, pid(0, bounds.length))
+      .sortWithinPartitions(keys: _*).queryExecution.toRdd
   }
-
 }

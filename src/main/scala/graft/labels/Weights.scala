@@ -1,7 +1,9 @@
 package graft.labels
 
 import graft.features.Scan
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -125,23 +127,23 @@ object Weights {
         .unionByName(deltas)
       val sch = stream.schema
       val dIdx = sch.fieldIndex("d")
-      val kIdxs = partCols.map(sch.fieldIndex)
+      val newKey = Scan.keyChanged(sch, partCols)
       Scan.affine(stream, partCols ++ Seq("ts", "ord", "id"), nStates = 1,
           coefs = (r, prev) => {
-            val nk = prev == null || kIdxs.exists(i => prev.get(i) != r.get(i))
+            val nk = newKey(r, prev)
             val d = r.getLong(dIdx).toDouble
             if (nk) Array(Scan.Affine(0.0, d)) else Array(Scan.Affine(1.0, d))
           },
           init = Array(0.0),
           emit = (s, _) => s(0).toLong,
-          outName = "concurrency", outType = LongType, pinned = true)
+          outName = "concurrency", outType = LongType)
         .where(col("ord") === 1)
         .select(pc :+ col("ts") :+ col("id") :+ col("price") :+ col("concurrency"): _*)
     } else {
       // Markers ride the scan with id := event_id so (ts, ord, id) is a
-      // total UNIQUE integral key (the pinned layout's determinism
-      // contract). Tie order within an equal (ts, ord) group cannot change
-      // any output row: trade rows all carry d = 0, and the cumulative sum
+      // total UNIQUE key (the scan layout's determinism contract). Tie
+      // order within an equal (ts, ord) group cannot change any output
+      // row: trade rows all carry d = 0, and the cumulative sum
       // at a trade row includes every marker sorting before it regardless
       // of intra-group order.
       require(labeled.columns.contains("event_id"),
@@ -161,7 +163,7 @@ object Weights {
           coefs = (r, _) => Array(Scan.Affine(1.0, r.getLong(dIdx).toDouble)),
           init = Array(0.0),
           emit = (s, _) => s(0).toLong,
-          outName = "concurrency", outType = LongType, pinned = true)
+          outName = "concurrency", outType = LongType)
         .where(col("ord") === 1)
         .select(col("ts"), col("id"), col("price"), col("concurrency"))
     }
@@ -183,7 +185,7 @@ object Weights {
     * Scale shape of the UNKEYED (reference single-series) path: the sweep
     * runs on [[Scan.affine2]] — conc / prev-price / row-count are stage-1
     * affine states, and the cum_u / cum_r prefix sums (whose increments
-    * read conc) are stage 2 over the same pinned layout. One shuffle,
+    * read conc) are stage 2 over the same scan layout. One shuffle,
     * three passes over its files, no single-partition window on the
     * trade-scaled stream; only the |events|-sized marker extract moves
     * through the final hash aggregation.
@@ -250,7 +252,7 @@ object Weights {
           abs(col("r1") - col("r0")).as("return_attribution")): _*)
     } else if (partCols.nonEmpty) {
       // Skew-safe keyed tier — reset-affine sweep on the SAME two-stage
-      // pinned scan as the unkeyed branch: a heavy-hitter symbol splits
+      // scan as the unkeyed branch: a heavy-hitter symbol splits
       // across range partitions instead of serializing on one task. The
       // scan orders by (partCols, ts, ord, id) and every state resets
       // with a = 0 coefficients at key boundaries; stage 2 learns about
@@ -279,14 +281,14 @@ object Weights {
       val ordIdx = sch.fieldIndex("ord")
       val priceIdx = sch.fieldIndex("price")
       val dIdx = sch.fieldIndex("d")
-      val kIdxs = partCols.map(sch.fieldIndex)
+      val newKey = Scan.keyChanged(sch, partCols)
       val keep = Scan.Affine(1.0, 0.0)
       val zero = Scan.Affine(0.0, 0.0)
       // stage 1: conc (running Σd), prev-trade seen flag + held price,
       // trade-row count, and the key-boundary flag for stage 2 — all
       // RESET (a = 0) on each key's first row so no state crosses keys
-      val coefs1 = (r: Row, prev: Row) => {
-        val nk = prev == null || kIdxs.exists(i => prev.get(i) != r.get(i))
+      val coefs1 = (r: InternalRow, prev: InternalRow) => {
+        val nk = newKey(r, prev)
         val d = r.getLong(dIdx).toDouble
         val conc = if (nk) Scan.Affine(0.0, d) else Scan.Affine(1.0, d)
         val (seen, held) =
@@ -305,7 +307,7 @@ object Weights {
       // and the held previous price, with the unkeyed branch's guards
       // (conc <= 0 → 0; no previous trade / zero prev price / non-finite
       // log-ratio → 0); a = 0 on key-first rows resets the sums
-      val coefs2 = (r: Row, st1: Array[Double]) => {
+      val coefs2 = (r: InternalRow, st1: Array[Double]) => {
         val a = if (st1(4) == 1.0) 0.0 else 1.0
         def aff(inc: Double) = Scan.Affine(a, inc)
         if (r.getInt(ordIdx) != 1) Array(aff(0.0), aff(0.0))
@@ -330,7 +332,7 @@ object Weights {
       val scanned = Scan.affine2(stream, partCols ++ Seq("ts", "ord", "id"),
         n1 = 5, coefs1, init1 = Array(0.0, 0.0, 0.0, 0.0, 0.0),
         n2 = 2, coefs2, init2 = Array(0.0, 0.0),
-        emit = (st1, st2, _) => Row(st2(0), st2(1), st1(3).toLong),
+        emit = (st1, st2, _) => InternalRow(st2(0), st2(1), st1(3).toLong),
         outName = "__sw", outType = outType)
 
       scanned.where(col("ord") =!= 1)
@@ -344,8 +346,8 @@ object Weights {
           ((col("u1") - col("u0")) / (col("n1") - col("n0"))).as("avg_uniqueness"),
           abs(col("r1") - col("r0")).as("return_attribution")): _*)
     } else {
-      // Unkeyed sweep on the two-stage pinned scan. Markers take
-      // id := event_id so (ts, ord, id) is total, unique and integral;
+      // Unkeyed sweep on the two-stage scan. Markers take
+      // id := event_id so (ts, ord, id) is total and unique;
       // intra-group tie order cannot change outputs (markers contribute 0
       // to u/r/n, trades contribute 0 to conc, and the extracted cum_*
       // values sit at marker rows whose prefix is tie-order invariant).
@@ -373,7 +375,7 @@ object Weights {
       // stage 1: conc (running Σd), prev-trade seen flag + price (a held
       // state, NEVER seeded with NaN: a = 0 set maps would turn 0·NaN + b
       // into NaN and poison every later hold), trade-row count
-      val coefs1 = (r: Row, prev: Row) => {
+      val coefs1 = (r: InternalRow, prev: InternalRow) => {
         val conc = Scan.Affine(1.0, r.getLong(dIdx).toDouble)
         val (seen, held) =
           if (prev != null && prev.getInt(ordIdx) == 1)
@@ -387,7 +389,7 @@ object Weights {
       // and the held previous price, mirroring the keyed branch's guards:
       // conc <= 0 → 0; no previous trade / zero prev price (try_divide
       // NULL) / NaN log-ratio → 0.
-      val coefs2 = (r: Row, st1: Array[Double]) => {
+      val coefs2 = (r: InternalRow, st1: Array[Double]) => {
         if (r.getInt(ordIdx) != 1) Array(keep, keep)
         else {
           val conc = st1(0)
@@ -414,7 +416,7 @@ object Weights {
       val scanned = Scan.affine2(stream, Seq("ts", "ord", "id"),
         n1 = 4, coefs1, init1 = Array(0.0, 0.0, 0.0, 0.0),
         n2 = 2, coefs2, init2 = Array(0.0, 0.0),
-        emit = (st1, st2, _) => Row(st2(0), st2(1), st1(3).toLong),
+        emit = (st1, st2, _) => InternalRow(st2(0), st2(1), st1(3).toLong),
         outName = "__sw", outType = outType)
 
       scanned.where(col("ord") =!= 1)
@@ -443,11 +445,14 @@ object Weights {
     *    shuffle-parallel across symbols.
     *  - `partCols` empty (the reference's single-series semantics): the
     *    cumulative sum is the affine recurrence s' = s + avgU, so it runs on
-    *    [[graft.features.Scan.affine]] (two passes, O(1) driver state, no
-    *    global sort); the grand total IS the scan's final fold state — free,
-    *    no extra aggregation pass. Callers should persist `eventWeights` if
-    *    its lineage is expensive (the scan's sample + shuffle passes each
-    *    evaluate it once).
+    *    [[graft.features.Scan.affineWithFinal]] (two passes, O(1) driver
+    *    state, no global sort); the grand total IS the scan's final fold
+    *    state — free, no extra aggregation pass — and `time_decay` is
+    *    computed in the scan's replay from it, so the plan carries no
+    *    data-derived literal. The scan materializes the exchanges of
+    *    `eventWeights` once; its bound sample and its routing shuffle each
+    *    re-run only the input's last (post-exchange) stage, so persist
+    *    `eventWeights` first only when that stage is expensive.
     */
   def withTimeDecay(eventWeights: DataFrame, lastWeight: Double,
                     partCols: Seq[String] = Nil): DataFrame = {
@@ -468,24 +473,26 @@ object Weights {
         .drop("__total", "__cum")
     } else {
       val uIdx = eventWeights.schema.fieldIndex("avg_uniqueness")
-      val (withCum, fin) = graft.features.Scan.affineWithFinal(
+      val floor = if (lastWeight < 0) 0.0 else Double.NegativeInfinity
+      Scan.affineWithFinal(
         eventWeights, Seq("event_ts", "event_id"), nStates = 1,
         coefs = (r, _) => {
           val u = if (r.isNullAt(uIdx)) 0.0 else r.getDouble(uIdx)
-          Array(graft.features.Scan.Affine(1.0, u))
+          Array(Scan.Affine(1.0, u))
         },
         init = Array(0.0),
-        emit = (s, _) => s(0),
-        outName = "__cum")
-      val total = fin(0)
-      val slope =
-        if (lastWeight >= 0) (1.0 - lastWeight) / total
-        else 1.0 / ((lastWeight + 1.0) * total)
-      withCum
-        .withColumn("time_decay",
-          greatest(lit(if (lastWeight < 0) 0.0 else Double.NegativeInfinity),
-            lit(1.0 - slope * total) + lit(slope) * col("__cum")))
-        .drop("__cum")
+        // the keyed branch's column formula with __total = fin(0) and
+        // __cum = s(0), evaluated in the same operation order; the floor
+        // is taken like Catalyst's greatest (NaN above all, -0.0 = 0.0)
+        emit = (s, _, fin) => {
+          val total = fin(0)
+          val slope =
+            if (lastWeight >= 0) (1.0 - lastWeight) / total
+            else 1.0 / ((lastWeight + 1.0) * total)
+          val v = (1.0 - slope * total) + slope * s(0)
+          if (SQLOrderingUtil.compareDoubles(v, floor) > 0) v else floor
+        },
+        outName = "time_decay")._1
     }
   }
 

@@ -236,7 +236,7 @@ object FeatureQueries {
 
     // Trades-domain time-window features: as-of lagged return (ReturnT) and
     // trailing-1h event rate (BarRate). The unkeyed (reference
-    // single-series) path rides ONE pinned affine scan instead of
+    // single-series) path rides ONE affine scan instead of
     // single-partition range windows: each trade plants three markers —
     //   lo   at (ts−1h, ord 0): trades strictly before ts−1h (rate lower
     //        bound; the range frame's −1h end is inclusive, so the marker
@@ -250,7 +250,7 @@ object FeatureQueries {
     // dependent holds). One shuffle; the groupBy is hash-parallel.
     "f_returnt_rate" -> ((s, dir) => {
       import graft.features.Scan
-      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.catalyst.InternalRow
       import org.apache.spark.sql.types._
       val t = Trades.fromEvents(Tables.events(s, dir))
         .select(col("ts"), col("id"), col("price"))
@@ -271,7 +271,7 @@ object FeatureQueries {
       val ordIdx = sch.fieldIndex("ord")
       val priceIdx = sch.fieldIndex("price")
       val keep = Scan.Affine(1.0, 0.0)
-      val coefs = (r: Row, prev: Row) => {
+      val coefs = (r: InternalRow, prev: InternalRow) => {
         val cnt = if (r.getInt(ordIdx) == 1) Scan.Affine(1.0, 1.0) else keep
         val (seen, held) =
           if (prev != null && prev.getInt(ordIdx) == 1)
@@ -281,11 +281,10 @@ object FeatureQueries {
       }
       val scanned = Scan.affine(stream, Seq("ts", "ord", "id"),
         nStates = 3, coefs, init = Array(0.0, 0.0, 0.0),
-        emit = (s, _) => Row(s(0).toLong,
+        emit = (s, _) => InternalRow(s(0).toLong,
           if (s(1) == 1.0) java.lang.Double.valueOf(s(2)) else null),
         outName = "__s", outType = StructType(Seq(
-          StructField("cnt", LongType), StructField("held", DoubleType))),
-        pinned = true)
+          StructField("cnt", LongType), StructField("held", DoubleType))))
       scanned.where(col("mk").isNotNull)
         .groupBy(col("qid"))
         .agg(max("qts").as("ts"), max("qprice").as("price"),

@@ -268,16 +268,16 @@ object LabelQueries {
 
     "label_weights" -> ((s, dir) => {
       import graft.features.Scan
-      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.catalyst.InternalRow
       import org.apache.spark.sql.types.DoubleType
       val lastWeight = 0.5
       val t = trades(s, dir)
       val lab = labeled(s, dir, isMeta = false).persist(graft.Conf.storageLevel)
       val ew = Weights.eventWeights(t, lab)
       // Join the labels in BEFORE the decay scan and persist ONCE: the
-      // scan's bounds sample + shuffle and the class-balance branches all
-      // read this one event-scaled cache (|trades|/29 rows), so the sweep
-      // runs exactly once and no later pass replays the trade stream.
+      // scan and the class-balance branches all read this one
+      // event-scaled cache (|trades|/29 rows), so the sweep runs exactly
+      // once and no later pass replays the trade stream.
       val j = ew.join(
         lab.select(col("event_id").as("eid"), col("label"),
           col("vertical_touch_weight")),
@@ -297,12 +297,12 @@ object LabelQueries {
       val uIdx = sch.fieldIndex("avg_uniqueness")
       val avIdx = sch.fieldIndex("av")
       val keep = Scan.Affine(1.0, 0.0)
-      val coefs1 = (r: Row, _: Row) => {
+      val coefs1 = (r: InternalRow, _: InternalRow) => {
         val u = if (r.isNullAt(uIdx)) 0.0 else r.getDouble(uIdx)
         Array(Scan.Affine(1.0, u), Scan.Affine(1.0, r.getDouble(avIdx)),
           Scan.Affine(1.0, 1.0))
       }
-      val coefs2 = (r: Row, st1: Array[Double]) =>
+      val coefs2 = (r: InternalRow, st1: Array[Double]) =>
         Array(Scan.Affine(1.0, r.getDouble(avIdx) * st1(0)))
       val (scanned, fin1, fin2) = Scan.affine2WithFinal(
         j, Seq("event_ts", "event_id"),

@@ -91,7 +91,7 @@ object Store {
     * per-partition metadata computed at ingest.
     *
     * Empty `partCols` = the reference's single-series semantics; the two
-    * lag passes then ride `Trades.lagGapFrames`-style pinned affine scans
+    * lag passes then ride `Trades.lagged` previous-row scans
     * (one parallel shuffle each) and only the tiny per-month summaries
     * join — the data-scaled stream never moves through a single-partition
     * window. At 100 TB pass the symbol column(s) — every window and the
@@ -120,7 +120,7 @@ object Store {
             sum(when(col("__tgap") > maxGapNs, 1L).otherwise(0L)).as("time_gaps"),
             max(when(col("__tgap") > maxGapNs, col("__tgap")).otherwise(0L)).as("max_time_gap_ns"))
       } else {
-        // Unkeyed: two pinned lag scans (id order; ts order) aggregated to
+        // Unkeyed: two lag scans (id order; ts order) aggregated to
         // per-month partials independently, then an equi-join of the tiny
         // month tables. Cross-month discontinuities attribute to the later
         // month exactly as the window formulation (the lag rides the global

@@ -141,13 +141,13 @@ object Trades {
     trades.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Lag-by-one of long columns over a total integral order, distributed:
-    * the pinned scan layout's boundary handoff threads the exact previous
-    * ROW (no affine double state — ns epochs exceed 2^53 and would lose
+  /** Lag-by-one of long columns over a total order, distributed: the
+    * scan layout's boundary handoff threads the exact previous ROW (no
+    * affine double state — ns epochs exceed 2^53 and would lose
     * precision). One parallel shuffle — the data-scaled stream never moves
     * through a single-partition window. Appends `prev_<c>` (null on the
     * first row) per lag column. Requires UNIQUE order keys (asserted by
-    * the pinned layout) unless `allowDupOrderKeys` — then `lagCols` must
+    * the scan) unless `allowDupOrderKeys` — then `lagCols` must
     * be a subset of `orderCols` (required, and sufficient for the equal-
     * key permutation-invariance contract on [[graft.features.Scan
     * .withPrevRow]]): integrity scans lag over possibly-CORRUPT streams
@@ -157,7 +157,8 @@ object Trades {
                             lagCols: Seq[String],
                             allowDupOrderKeys: Boolean = false): DataFrame = {
     import graft.features.Scan
-    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.sql.types._
     require(!allowDupOrderKeys || lagCols.forall(orderCols.contains),
       "allowDupOrderKeys needs lagCols ⊆ orderCols (permutation invariance)")
@@ -165,8 +166,8 @@ object Trades {
     val n = idxs.length
     Scan.withPrevRow(df, orderCols,
         out = (_, prev) =>
-          if (prev == null) Row.fromSeq(Seq.fill(n)(null))
-          else Row.fromSeq(idxs.toSeq.map(i => prev.getLong(i))),
+          if (prev == null) new GenericInternalRow(n)
+          else InternalRow.fromSeq(idxs.toSeq.map(i => prev.getLong(i))),
         outName = "__lag",
         outType = StructType(lagCols.map(c => StructField(s"prev_$c", LongType))),
         allowDupOrderKeys = allowDupOrderKeys)
@@ -177,7 +178,7 @@ object Trades {
   /** Trade-id gap scan — `_validate_data` (data_model.py:254-292):
     * rows where id jumps by >1, with surrounding timestamps. `partCols`
     * runs the scan per symbol (shuffle-parallel) for multi-series stores;
-    * the unkeyed (reference single-series) path rides the pinned affine
+    * the unkeyed (reference single-series) path rides the affine
     * scan — one parallel shuffle, no single-partition window.
     */
   def idGaps(trades: DataFrame, partCols: Seq[String] = Nil): DataFrame = {

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.StructType
   * libraries use to surface custom Catalyst expressions as Columns.
   * [[internalDataFrame]] likewise surfaces the `private[sql]`
   * `InternalRow` frame constructor for typed `mapPartitions` kernels,
-  * and [[asNullable]] the `private[spark]` schema relaxation that file
-  * sources apply to every schema they read.
+  * [[asNullable]] the `private[spark]` schema relaxation that file
+  * sources apply to every schema they read, and [[withExecution]] the
+  * SQL-execution scope a Dataset action runs its jobs in.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -22,4 +23,12 @@ object GraftSqlBridge {
                         schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
   def asNullable(schema: StructType): StructType = schema.asNullable
+  /** `body` as one SQL execution of `df`'s query, as a Dataset action
+    * runs: the jobs it starts carry the session's job tags and artifact
+    * state, so their tasks load generated classes through the session's
+    * executor class loader.
+    */
+  def withExecution[T](df: DataFrame, name: String)(body: => T): T =
+    execution.SQLExecution.withNewExecutionId(
+      df.asInstanceOf[classic.Dataset[Row]].queryExecution, Some(name))(body)
 }

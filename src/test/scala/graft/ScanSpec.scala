@@ -478,9 +478,9 @@ class ScanSpec extends AnyFunSuite {
     }
   }
 
-  test("pinned affine scan equals the persisted path (prev-dependent coefs)") {
+  test("affine scan with prev-dependent coefs equals the sequential recursion") {
     // irregular timestamps so the Δt-decay coefficients exercise the
-    // prev-row handoff across the pinned re-shuffle's boundaries
+    // prev-row handoff across the layout's partition boundaries
     val rnd = new scala.util.Random(23)
     var ts = 0L
     val rows = (0 until 400).map { i =>
@@ -490,7 +490,7 @@ class ScanSpec extends AnyFunSuite {
     val t = rows.toDF("ts", "id", "price", "qty", "symbol")
     import graft.features.Scan
     import graft.features.Scan.Affine
-    def run(pin: Boolean) = Scan.affine(
+    def run() = Scan.affine(
       t, Seq("ts", "id"), nStates = 2,
       coefs = (r, prev) => {
         if (prev == null) Array.fill(2)(Affine(1.0, 0.0))
@@ -502,32 +502,38 @@ class ScanSpec extends AnyFunSuite {
       },
       init = Array(0.0, 0.0),
       emit = (s, _) => if (s(1) > 0) s(0) / s(1) else Double.NaN,
-      outName = "o", numParts = 7, pinned = pin)
+      outName = "o", numParts = 7)
       .orderBy("ts").select("o").as[Double].collect().toSeq
-    val (a, b) = (run(false), run(true))
-    assert(a.size == b.size && a.size == 400)
+    var u = 0.0; var v = 0.0
+    val exp = rows.indices.map { i =>
+      if (i > 0) {
+        val om = math.exp(-((rows(i)._1 - rows(i - 1)._1) / 1e9) / 600.0)
+        u = om * u + rows(i)._3; v = om * v + 1.0
+      }
+      if (v > 0) u / v else Double.NaN
+    }
+    val (a, b) = (run(), run())
+    assert(a.size == 400 && b.size == 400)
+    a.zip(exp).zipWithIndex.foreach { case ((g, e), i) =>
+      if (e.isNaN) assert(g.isNaN, s"row $i")
+      else assert(math.abs(g - e) <= math.abs(e) * 1e-12, s"row $i: $g vs $e")
+    }
     a.zip(b).zipWithIndex.foreach { case ((x, y), i) =>
       if (x.isNaN) assert(y.isNaN, s"row $i")
       else assert(x == y, s"row $i: $x vs $y") // bit-identical, same fold order
     }
   }
 
-  test("affine auto-pins on shuffled lineage and stays exact") {
+  test("affine over a shuffled lineage stays exact") {
     import graft.features.Scan
     import graft.features.Scan.Affine
     val rows = (0 until 300).map(i => (i.toLong * 1000000000L, i.toLong, 1.0 + (i % 17)))
     val plain = rows.toDF("ts", "id", "price")
-    assert(!Scan.lineageHasShuffle(plain), "projection-only lineage must not flag")
-    // repartition = RoundRobin shuffle: replay order is nondeterministic,
-    // so the scan must take the pinned path without caller opt-in
-    val shuffled = plain.repartition(7)
-    assert(Scan.lineageHasShuffle(shuffled))
-    assert(Scan.lineageHasShuffle(
-      plain.groupBy("id").agg(max("ts").as("ts"), max("price").as("price"))))
-    // the auto-pinned run must equal the sequential recursion exactly
+    // repartition = RoundRobin shuffle: its replay order is
+    // nondeterministic, and the layout must not depend on it
     val q = 0.9
-    val got = Scan.affine(
-      shuffled, Seq("ts", "id"), nStates = 1,
+    def run(df: DataFrame) = Scan.affine(
+      df, Seq("ts", "id"), nStates = 1,
       coefs = (r, _) => Array(Affine(q, r.getDouble(2))),
       init = Array(0.0),
       emit = (s, _) => s(0),
@@ -535,15 +541,21 @@ class ScanSpec extends AnyFunSuite {
       .orderBy("ts").select("o").as[Double].collect().toSeq
     var acc = 0.0
     val exp = rows.map { case (_, _, p) => acc = q * acc + p; acc }
-    got.zip(exp).zipWithIndex.foreach { case ((g, e), i) =>
-      // affine maps compose in a different association order than the
-      // sequential recursion → ulp-level differences are expected
-      assert(math.abs(g - e) <= math.abs(e) * 1e-12, s"row $i: $g vs $e")
+    val shuffled = Seq(plain.repartition(7),
+      plain.groupBy("id").agg(max("ts").as("ts"), max("price").as("price"))
+        .select("ts", "id", "price"))
+    shuffled.foreach { df =>
+      val got = run(df)
+      assert(got.size == 300)
+      got.zip(exp).zipWithIndex.foreach { case ((g, e), i) =>
+        // affine maps compose in a different association order than the
+        // sequential recursion → ulp-level differences are expected
+        assert(math.abs(g - e) <= math.abs(e) * 1e-12, s"row $i: $g vs $e")
+      }
     }
   }
 
-  test("lineageHasShuffle flags frames over an RDD, not parquet scans") {
-    import graft.features.Scan
+  test("affine over an RDD-backed frame equals the scan over its parquet copy") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("ts", LongType),
@@ -553,22 +565,23 @@ class ScanSpec extends AnyFunSuite {
       .map(i => (i % 7, i)).groupByKey(3)
       .flatMap { case (_, is) => is.map(i => Row(i.toLong * 1000L, i.toLong, 1.0 + i % 5)) }
     val overRdd = spark.createDataFrame(shuffled, schema)
-    assert(Scan.lineageHasShuffle(overRdd))
-    assert(Scan.lineageHasShuffle(overRdd.select("ts", "id")))
     val dir = java.nio.file.Files.createTempDirectory("lineage").resolve("t").toString
     try {
       overRdd.write.parquet(dir)
       val scanned = spark.read.parquet(dir)
-      assert(!Scan.lineageHasShuffle(scanned), "a parquet scan must not flag")
-      assert(!Scan.lineageHasShuffle(scanned.where(col("id") > 3)))
-      // the auto-pinned scan over the RDD-backed frame matches the cached
-      // one over the same rows read back from parquet (the two layouts may
-      // group the affine folds differently: ulp-level differences only)
+      // the scan over the RDD-backed frame matches the one over the same
+      // rows read back from parquet — the same key multiset gives the same
+      // bounds, so the two fold in the same grouping: bit-identical — and
+      // both match the sequential recursion to the ulp
       def ewm(df: DataFrame): Seq[Double] =
         Ewm.ewmaExact(df, "price", 10).orderBy("ts").select("ewma").as[Double].collect().toSeq
       val (a, b) = (ewm(overRdd), ewm(scanned))
       assert(a.size == 300 && b.size == 300)
-      a.zip(b).foreach { case (x, y) => assert(math.abs(x - y) <= math.abs(y) * 1e-12, s"$x vs $y") }
+      assert(a == b)
+      val q = 1.0 - 2.0 / 11.0
+      var u = 0.0; var v = 0.0
+      val exp = (0 until 300).map { i => u = (1.0 + i % 5) + q * u; v = 1 + q * v; u / v }
+      a.zip(exp).foreach { case (x, e) => assert(math.abs(x - e) <= math.abs(e) * 1e-12, s"$x vs $e") }
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir).getParentFile)
     }
@@ -616,17 +629,16 @@ class ScanSpec extends AnyFunSuite {
     val input = (0 until 300)
       .map(i => (i.toLong, i.toLong, 1.0 + (i % 17)))
       .toDF("ts", "id", "price")
-      .repartition(5) // shuffled lineage → auto-pin
+      .repartition(5)
     val base = shuffles(input.rdd)
     val out = Scan.affine(
       input, Seq("ts", "id"), nStates = 1,
       coefs = (r, _) => Array(Affine(0.9, r.getDouble(2))),
       init = Array(0.0), emit = (s, _) => s(0),
       outName = "o", numParts = 4)
-    // the r4 pinned path paid TWO shuffles (phase-A range + phase-B
-    // boundary re-shuffle); the frozen-partitioner layout costs one
+    // phase B reads phase A's shuffle files: the frozen layout costs one
     assert(shuffles(out.rdd) == base + 1,
-      s"pinned scan must add exactly one shuffle (input=$base, " +
+      s"the scan must add exactly one shuffle (input=$base, " +
         s"out=${shuffles(out.rdd)})")
   }
 
@@ -640,7 +652,7 @@ class ScanSpec extends AnyFunSuite {
         t, Seq("ts", "id"), nStates = 1,
         coefs = (r, _) => Array(Affine(1.0, r.getDouble(2))),
         init = Array(0.0), emit = (s, _) => s(0),
-        outName = "o", numParts = 2, pinned = true)
+        outName = "o", numParts = 2)
     }
     def msgs(e: Throwable): Seq[String] =
       if (e == null) Nil else Option(e.getMessage).toSeq ++ msgs(e.getCause)
@@ -652,16 +664,119 @@ class ScanSpec extends AnyFunSuite {
     import graft.features.Scan
     import graft.features.Scan.Affine
     val vals = (0 until 500).map(i => (i.toLong, i.toLong, 0.25 + (i % 9)))
-    val t = vals.toDF("ts", "id", "v").repartition(5) // shuffled → pinned
+    val t = vals.toDF("ts", "id", "v").repartition(5)
     val (out, fin) = Scan.affineWithFinal(
       t, Seq("ts", "id"), nStates = 1,
       coefs = (r, _) => Array(Affine(1.0, r.getDouble(2))),
-      init = Array(0.0), emit = (s, _) => s(0),
+      init = Array(0.0), emit = (s, _, _) => s(0),
       outName = "cum", numParts = 4)
     val total = vals.map(_._3).sum
     assert(math.abs(fin(0) - total) < 1e-9)
     val lastCum = out.orderBy(desc("ts")).select("cum").as[Double].head()
     assert(math.abs(lastCum - total) < 1e-9)
+  }
+
+  test("affine2WithFinal executes its shuffled input once") {
+    import graft.features.Scan
+    import graft.features.Scan.Affine
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val dir = java.nio.file.Files.createTempDirectory("scan-once").resolve("t").toString
+    try {
+      (0 until 400).map(i => (i.toLong, i.toLong, 1L)).toDF("ts", "id", "d")
+        .write.parquet(dir)
+      // two exchanges upstream of the scan: a round-robin repartition and
+      // the aggregate's hash exchange
+      val input = spark.read.parquet(dir).repartition(5)
+        .groupBy("id").agg(max("ts").as("ts"), sum("d").as("d"))
+        .select("ts", "id", "d")
+      val sc = spark.sparkContext
+      val read = new java.util.concurrent.atomic.AtomicLong
+      val listener = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      }
+      sc.addSparkListener(listener)
+      try {
+        org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+        read.set(0)
+        val (out, fin1, _) = Scan.affine2WithFinal(input, Seq("ts", "id"),
+          n1 = 1, (r, _) => Array(Affine(1.0, r.getLong(2).toDouble)), Array(0.0),
+          n2 = 1, (_, s1) => Array(Affine(1.0, s1(0))), Array(0.0),
+          emit = (_, s2, _) => s2(0),
+          outName = "o", outType = org.apache.spark.sql.types.DoubleType,
+          numParts = 4)
+        assert(out.count() == 400 && fin1(0) == 400.0)
+        org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+        // the file scan sits below the first exchange: every execution of
+        // that exchange's map stage reads the 400 rows again
+        assert(read.get == 400, s"the input's exchange ran ${read.get / 400.0} times")
+      } finally sc.removeSparkListener(listener)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir).getParentFile)
+    }
+  }
+
+  test("unkeyed weights chain and ewmst are bit-identical across reps") {
+    // the layout's bounds are a pure function of the key multiset, so two
+    // runs over the same data compose their affine maps in the same
+    // grouping: raw doubles compare ==, not within a tolerance
+    val rnd = new scala.util.Random(17)
+    var ts = 0L
+    val rows = (0 until 900).map { i =>
+      ts += (1 + rnd.nextInt(40)).toLong * 1000000000L
+      (ts, i.toLong, 100.0 + rnd.nextDouble() * 10, 1.0, 0L)
+    }
+    val t = rows.toDF("ts", "id", "price", "qty", "symbol")
+    val ev = t.where(col("id") % 13 === 0).select(
+      col("ts").as("event_ts"), col("id").as("event_id"),
+      (col("ts") + lit(300000000000L)).as("touch_ts"))
+    def bits(xs: Seq[Double]): Seq[Long] = xs.map(java.lang.Double.doubleToRawLongBits)
+    def weights(): Seq[Long] = bits(graft.labels.Weights.withTimeDecay(
+        graft.labels.Weights.eventWeights(t, ev), 0.5)
+      .orderBy("event_id")
+      .select("avg_uniqueness", "return_attribution", "time_decay")
+      .collect().toSeq.flatMap(r => Seq(r.getDouble(0), r.getDouble(1), r.getDouble(2))))
+    def sigma(): Seq[Long] = bits(Ewm.ewmstExact(t, "price", 600.0)
+      .orderBy("ts").select("ewmst").as[Double].collect().toSeq)
+    val (w1, w2) = (weights(), weights())
+    assert(w1.nonEmpty && w1 == w2)
+    val (s1, s2) = (sigma(), sigma())
+    assert(s1.size == 900 && s1 == s2)
+  }
+
+  test("unkeyed time decay is computed in the scan: no data-derived literal") {
+    import graft.features.Scan
+    import graft.features.Scan.Affine
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.DoubleType
+    val rnd = new scala.util.Random(31)
+    val ew = (0 until 300).map { i =>
+      (i.toLong * 1000000000L + rnd.nextInt(1000), i.toLong, rnd.nextDouble() * 0.9 + 0.05)
+    }.toDF("event_ts", "event_id", "avg_uniqueness")
+    for (lastWeight <- Seq(0.5, -0.25)) {
+      val got = graft.labels.Weights.withTimeDecay(ew, lastWeight)
+      val lits = got.queryExecution.optimizedPlan.flatMap(_.expressions)
+        .flatMap(_.collect { case l: Literal if l.dataType == DoubleType => l })
+      assert(lits.isEmpty, s"data-derived literals in the plan: $lits")
+      // the column formula the decay used before it moved into the scan,
+      // over the same scan's prefix and total
+      val (withCum, fin) = Scan.affineWithFinal(
+        ew, Seq("event_ts", "event_id"), nStates = 1,
+        coefs = (r, _) => Array(Affine(1.0, if (r.isNullAt(2)) 0.0 else r.getDouble(2))),
+        init = Array(0.0), emit = (s, _, _) => s(0), outName = "__cum")
+      val total = fin(0)
+      val slope =
+        if (lastWeight >= 0) (1.0 - lastWeight) / total
+        else 1.0 / ((lastWeight + 1.0) * total)
+      val old = withCum.withColumn("time_decay",
+          greatest(lit(if (lastWeight < 0) 0.0 else Double.NegativeInfinity),
+            lit(1.0 - slope * total) + lit(slope) * col("__cum")))
+        .drop("__cum")
+      def rows(df: DataFrame) = df.orderBy("event_id").select("event_id", "time_decay")
+        .collect().map(r => (r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
+        .toSeq
+      assert(rows(got).size == 300 && rows(got) == rows(old), s"lastWeight=$lastWeight")
+    }
   }
 
   test("affine2 chained scan equals the sequential two-stage recursion") {

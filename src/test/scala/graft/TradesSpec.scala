@@ -87,7 +87,7 @@ class TradesSpec extends AnyFunSuite {
 
   test("integrity scans REPORT duplicate ids instead of crashing") {
     // duplicate ids are the corruption an integrity scan exists to find —
-    // the pinned scan's uniqueness assertion must not fire on them
+    // the scan's uniqueness assertion must not fire on them
     val d = Seq(
       (1000000000L, 1L, 100.0, 1.0),
       (2000000000L, 2L, 100.0, 1.0),
