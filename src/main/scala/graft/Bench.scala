@@ -1,20 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import scala.util.control.NonFatal
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // engine defaults (checksum-off, AQE advisory coalescing) live in
     // Conf.engineDefaults so bench/verify/profilers always share them
-    val spark = Conf.engineDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Conf.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     Conf.resolveStatePartitions(spark, sfDir)
     // JIT/codegen warmup (the reference's perf numbers are likewise
     // JIT-warm): touch each input table and exercise one shuffle + one

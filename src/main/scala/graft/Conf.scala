@@ -7,9 +7,9 @@ import scala.util.control.NonFatal
 /** Engine-wide tuning knobs read from the environment. */
 object Conf {
 
-  /** Engine session defaults shared by every session builder (the mains,
-    * the fixture builders and the test session) so bench, verify and tests
-    * always execute under the SAME engine configuration:
+  /** Engine session defaults shared by every session (the mains, the test
+    * session and perfbench's harness) so bench, verify and tests always
+    * execute under the SAME engine configuration:
     *
     *  - checkpoint-file checksums OFF by default (r14: Spark 4.1 writes +
     *    awaits a companion checksum file for EVERY checkpoint/state file —
@@ -44,8 +44,9 @@ object Conf {
     *    heap by a few MB. It is a constant, not an env var or option:
     *    the cache is static, sized once per JVM when `CodeGenerator` first
     *    loads, so only the FIRST session built in a JVM decides it and a
-    *    setting on any later session does nothing. Every session builder in
-    *    the repo goes through this function for that reason.
+    *    setting on any later session does nothing. Every session in the
+    *    repo is built by [[localSession]], which goes through this
+    *    function, for that reason.
     *
     * Returns the builder for chaining.
     */
@@ -58,6 +59,19 @@ object Conf {
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
         sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
       .config("spark.sql.codegen.cache.maxEntries", 1000L)
+
+  /** The repo's one session builder: a `local[cpus]` session over
+    * [[engineDefaults]] with `cpus` shuffle partitions, the UI off and
+    * WARN logging — for the mains and the test session alike.
+    */
+  def localSession(cpus: Int): SparkSession = {
+    val spark = engineDefaults(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.ui.enabled", "false")).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Streaming STATE partition count for the gate fixtures, resolved once
     * per session from the input volume (guide §2: make partitioning

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 
@@ -14,12 +13,8 @@ import scala.util.control.NonFatal
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Conf.engineDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Conf.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     Conf.resolveStatePartitions(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>

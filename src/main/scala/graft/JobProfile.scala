@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Dev scratch: run one query end-to-end (noop sink, like Bench) with a
@@ -10,15 +9,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val name = args(1)
-    val cpus = if (args.length > 2) args(2) else "32"
-    val b0 = Conf.engineDefaults(SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-    val b = sys.env.get("GRAFT_PROFILE_CONF").map(_.split(";").toSeq)
-      .getOrElse(Nil).map(_.split("=", 2)).filter(_.length == 2)
-      .foldLeft(b0)((bb, kv) => bb.config(kv(0), kv(1)))
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Conf.localSession(if (args.length > 2) args(2).toInt else 32)
+    // `k=v;k=v` session conf overrides, set after start: a static conf
+    // fails loudly here instead of being ignored by getOrCreate
+    sys.env.get("GRAFT_PROFILE_CONF").toSeq.flatMap(_.split(";"))
+      .map(_.split("=", 2)).filter(_.length == 2)
+      .foreach(kv => spark.conf.set(kv(0), kv(1)))
     Conf.resolveStatePartitions(spark, sfDir)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Dev tool: sweep every SparkEntry query's physical plan for scale
@@ -15,11 +14,7 @@ import scala.util.control.NonFatal
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = Conf.engineDefaults(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Conf.localSession(8)
     // A BNLJ is sanctioned only as the scalar crossJoin(broadcast(1-row
     // agg)) pattern: Cross type AND a keyless aggregate somewhere in the
     // BUILD subtree (a pushed filter may still appear as its condition —

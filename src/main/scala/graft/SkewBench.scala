@@ -1,15 +1,16 @@
 package graft
 
 import graft.features.Scan
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 
-/** Key-skew resilience harness — the 100 TB question the uniform
-  * [[SymBench]] fixture can't ask: real trade corpora have heavy-hitter
-  * symbols (one instrument carrying most of the volume), and a keyed
-  * sequential operator laid out as one-task-per-key serializes the whole
-  * heavy key on one core no matter how many the cluster has.
+/** Key-skew resilience harness — the 100 TB question a uniform
+  * many-symbol fixture (SYM_SCALING `sym_scaling` lines) can't ask: real
+  * trade corpora have heavy-hitter symbols (one instrument carrying most
+  * of the volume), and a keyed sequential operator laid out as
+  * one-task-per-key serializes the whole heavy key on one core no matter
+  * how many the cluster has.
   *
   * The harness times the SAME per-symbol EWMA recursion through both keyed
   * layouts on two fixtures:
@@ -60,11 +61,7 @@ object SkewBench {
     val fixtures = Seq("uniform" -> "target/skewfix_uniform",
       "skew" -> "target/skewfix_skew")
     val rowsPerFixture: Long = {
-      val spark = Conf.engineDefaults(SparkSession.builder()
-        .master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")).getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = Conf.localSession(8)
       val base = graft.trades.Trades.fromEvents(Tables.events(spark, sfDir))
         .select("ts", "id", "price", "qty", "symbol")
       val idSpan = base.agg(max("id")).first().getLong(0) + 1L
@@ -89,11 +86,7 @@ object SkewBench {
     // pick-to-cell attribution)
     val autoPicks = scala.collection.mutable.LinkedHashMap[String, String]()
     val runs = cpuList.map { cpus =>
-      val spark = Conf.engineDefaults(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")).getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = Conf.localSession(cpus)
 
       def seqLayout(t: DataFrame): DataFrame =
         Scan.seqDouble(t, Seq("ts", "id"), "ewma", Seq("symbol")) {
@@ -213,8 +206,8 @@ object SkewBench {
               .map(s => if (s) "safe" else "window").getOrElse("?"))
         s"${kind}_$layout" -> secs.min
       }
-      // stop per iteration (like SymBench/StreamBench): getOrCreate would
-      // otherwise return the previous local[N] session and mislabel cells
+      // stop per iteration: getOrCreate would otherwise return the
+      // previous local[N] session and mislabel cells
       spark.stop()
       (cpus, cells)
     }

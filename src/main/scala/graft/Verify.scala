@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -7,15 +6,10 @@ import scala.util.control.NonFatal
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same engine defaults as Bench (Conf.engineDefaults): verify must
-    // execute under the configuration the bench certifies
-    val spark = Conf.engineDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // same session as Bench (Conf.localSession): verify must execute
+    // under the configuration the bench certifies
+    val spark = Conf.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     Conf.resolveStatePartitions(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset for local iteration (driver runs all)

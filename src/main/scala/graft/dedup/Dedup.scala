@@ -95,7 +95,8 @@ object Dedup {
     * its map-side combine already kept that shuffle small, so the rework
     * is mostly a PLAN simplification (one implementation shared with the
     * streaming twin, one fewer wide aggregate; ~20% on the 1.5M-doc
-    * DocFixture at 32 cores, within box noise) — the structural point is
+    * fixture of the SYM_SCALING `doc_scaling` lines at 32 cores, within box
+    * noise) — the structural point is
     * that batch and stream now band through literally the same expression.
     * Bucket keys are bit-identical across the twins — gate-, spec- and
     * property-pinned. Buckets then emit their pairs directly
@@ -827,7 +828,9 @@ object Dedup {
 
   /** Diagnostics only: rounds the most recent [[connectedComponents]] call
     * on this driver took to converge (includes the final fixpoint-verify
-    * round). Read by DocBench's scale lines; not part of any result.
+    * round; 0 on the driver union-find tier). Read by DocSpec's tier
+    * checks; the `cc_rounds` cells of the SYM_SCALING `doc_scaling` lines
+    * record it at scale. Not part of any result.
     */
   @volatile var lastCcRounds: Int = 0
 

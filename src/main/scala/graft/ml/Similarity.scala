@@ -417,8 +417,8 @@ object Similarity {
     * of historical cells — one partitioned append per batch, exactly the
     * trades store's append-then-compact shape. The cost is codebook DRIFT:
     * appended data follows the old centroids, so cell populations skew as
-    * the distribution moves; IvfAppendDrift measures the recall impact vs
-    * a full re-cluster (SYM_SCALING `ivf_append_drift` line) — the
+    * the distribution moves; the SYM_SCALING `ivf_append_drift` line
+    * records the recall impact vs a full re-cluster — the
     * re-cluster cadence is an operational knob, not a correctness issue
     * (probes stay exact for whatever codebook the index declares).
     */

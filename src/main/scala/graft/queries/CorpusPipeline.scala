@@ -13,8 +13,9 @@ import org.apache.spark.sql.types.StructType
   * front, then one shared probe-then-append tail — AS-OF exact-dedup
   * probe against the seen hashes → AS-OF LSH probe against the stored
   * band index → staged shard write → publish (store, seen, index).
-  * Driven by the `streaming_corpus_*` gates through [[drain]] and by
-  * DocBench's `corpus_e2e_live_*` cells through their own batch loop.
+  * Driven by the `streaming_corpus_*` gates through [[drain]]; its
+  * scale record is the SYM_SCALING `doc_scaling` lines
+  * (`corpus_e2e_live_*` cells, round 13).
   *
   * State discipline (exactly-once under replay): all three state tables
   * publish BATCH-SCOPED — store/seen through StateStore.publishBatch

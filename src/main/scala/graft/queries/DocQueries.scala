@@ -664,8 +664,9 @@ object DocQueries {
     // dirs — no re-cluster, no rewrite), and a probe of the appended
     // index must be bit-identical to the in-memory IVF over the FULL
     // corpus with the same stored codebook. Codebook drift vs a full
-    // re-cluster is measured separately (IvfAppendDrift — an operational
-    // re-cluster-cadence knob, not a correctness property).
+    // re-cluster is recorded separately (SYM_SCALING `ivf_append_drift`
+    // line — an operational re-cluster-cadence knob, not a correctness
+    // property).
     "ann_topk_ivf_append" -> ((s, dir) => {
       val e = emb(s, dir)
       val base = e.where(pmod(col("vec_id"), lit(5)) =!= 0)

@@ -3,7 +3,7 @@ package graft.queries
 import graft.queries.Q._
 import graft.streaming.{StreamingBars, StreamingDedup}
 import graft.trades.Trades
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -19,8 +19,9 @@ import org.apache.spark.sql.streaming.Trigger
   * result set): a production deployment writes the identical stream to a
   * parquet/Kafka sink — the operators under test are sink-agnostic, and
   * their unbounded-scale behavior (state size, watermark eviction,
-  * micro-batch commit cost) is certified separately by StreamBench's
-  * 10M-row drains (SYM_SCALING `stream_scaling` lines).
+  * micro-batch commit cost) was certified separately by 10M-row drains
+  * (the SYM_SCALING `stream_scaling` lines) and is timed today by
+  * perfbench's `bars_stream` workload.
   */
 object StreamQueries {
 
@@ -209,15 +210,13 @@ object StreamQueries {
         s"state $st is not folded: ${dirs.mkString(",")}")
     }
 
-  /** Canonical trades written to a fresh temp dir as (data, sentinel-1,
-    * sentinel-2) parquet files with pinned modification times, returned
-    * as a one-file-per-batch stream — the shared fixture for every
-    * streaming-bars gate.
+  /** The fixture behind every file-stream gate: `files` written under a
+    * fresh tmpdir/`tmpName` as one parquet file each, modification times
+    * pinned 10 s apart in `files` order, read back one file per
+    * micro-batch (`maxFilesPerTrigger` = 1) with the first frame's schema.
     */
-  private def tradeFileStream(s: SparkSession, dir: String,
-                              tmpName: String): DataFrame = {
-    val trades = Trades.fromEvents(graft.Tables.events(s, dir))
-      .select("ts", "id", "price", "qty")
+  private def batchFileStream(s: SparkSession, tmpName: String,
+                              files: Seq[(String, DataFrame)]): DataFrame = {
     val tmp = new java.io.File(sys.props("java.io.tmpdir"), tmpName)
       .getAbsolutePath
     // wipe stale runs: the source must see exactly this invocation's files
@@ -225,18 +224,57 @@ object StreamQueries {
     val p = new org.apache.hadoop.fs.Path(tmp)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
-    val t0 = System.currentTimeMillis()
-    writeOneFile(trades, tmp, "a_data", t0 - 60000)
-    def sentinel(ns: Long, id: Long) =
-      s.range(1).select(lit(ns).as("ts"), lit(id).as("id"),
-        lit(1.0).as("price"), lit(1.0).as("qty"))
-    writeOneFile(sentinel(sentinelNs, 9000000000L), tmp, "b_s1", t0 - 40000)
-    writeOneFile(sentinel(sentinelNs + 600000000000L, 9000000001L),
-      tmp, "c_s2", t0 - 20000)
-    s.readStream
-      .schema(trades.schema)
+    val t0 = System.currentTimeMillis() - 10000L * files.size
+    files.zipWithIndex.foreach { case ((name, df), i) =>
+      writeOneFile(df, tmp, name, t0 + 10000L * i)
+    }
+    s.readStream.schema(files.head._2.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(tmp + "/*")
+  }
+
+  /** Flush sentinel `k` (0 or 1) in `like`'s columns: ts `sentinelNs` +
+    * k·10 min, reserved id 9e9 + k, unit price and qty, side and symbol 0.
+    * Two of them in separate files advance the (global) event-time
+    * watermark past every real bar plus delay — watermarks lag one batch,
+    * so the second sentinel's batch finalizes everything; a single one
+    * flushes a lookahead-1 machine's pending tail and itself never emits.
+    */
+  private def sentinelRow(like: DataFrame, k: Int): DataFrame = {
+    val v = Map("ts" -> lit(sentinelNs + k * 600000000000L),
+      "id" -> lit(9000000000L + k), "price" -> lit(1.0), "qty" -> lit(1.0),
+      "side" -> lit(0), "symbol" -> lit(0L))
+    like.sparkSession.range(1).select(like.columns.map(c => v(c).as(c)): _*)
+  }
+
+  /** One far-future heartbeat row PER SYMBOL (id 9e9 + symbol): flushes
+    * every per-symbol lookahead-1 tail; the heartbeats stay pending.
+    */
+  private def symbolHeartbeats(trades: DataFrame): DataFrame =
+    trades.select(col("symbol")).distinct()
+      .select(lit(sentinelNs).as("ts"),
+        (lit(9000000000L) + col("symbol")).as("id"), lit(1.0).as("price"),
+        lit(1.0).as("qty"), col("symbol"))
+
+  /** `df` split at its median ts into an early and a late file — two
+    * micro-batches, so every bar, EWMA value or event that straddles the
+    * split proves cross-batch state.
+    */
+  private def medianSplit(df: DataFrame): Seq[(String, DataFrame)] = {
+    val mid = df.agg(expr("cast(median(ts) as bigint)")).head().getLong(0)
+    Seq("a_early" -> df.where(col("ts") <= mid),
+      "b_late" -> df.where(col("ts") > mid))
+  }
+
+  /** Canonical trades (ts, id, price, qty) plus the two flush sentinels —
+    * the fixture for the watermarked streaming-bars gates.
+    */
+  private def tradeFileStream(s: SparkSession, dir: String,
+                              tmpName: String): DataFrame = {
+    val trades = Trades.fromEvents(graft.Tables.events(s, dir))
+      .select("ts", "id", "price", "qty")
+    batchFileStream(s, tmpName, Seq("a_data" -> trades,
+      "b_s1" -> sentinelRow(trades, 0), "c_s2" -> sentinelRow(trades, 1)))
   }
 
   /** Sentinel filter + the canonical rounded bar projection — shared by
@@ -251,113 +289,62 @@ object StreamQueries {
         r6(col("close")).as("close"), r6(col("volume")).as("volume"),
         col("trades"), q6(col("vwap")).as("vwap"))
 
-  /** Batch-sided canonical trades (ts, id, price, qty, side, symbol 0) as
-    * a one-file-per-batch stream with the two flush sentinels — the
-    * fixture for the directional / footprint state-machine gates. Side
-    * assignment (tick rule) is a GLOBAL scan and happens upstream at
-    * ingest, exactly as it does for the batch twins — the stream under
-    * test is the stateful bar operator, which consumes sided trades.
+  /** Tick-rule-sided canonical trades (ts, id, price, qty, side, symbol):
+    * the tick rule runs per `partCols` and the stream carries `symbol`.
+    * Side assignment is a scan over the whole input and happens upstream at
+    * ingest, exactly as it does for the batch twins — the stream under test
+    * is the stateful bar operator, which consumes sided trades.
+    */
+  private def sidedTrades(s: SparkSession, dir: String, partCols: Seq[String],
+                          symbol: Column): DataFrame =
+    Trades.withTickRuleSide(Trades.fromEvents(graft.Tables.events(s, dir)),
+        partCols)
+      .select(col("ts"), col("id"), col("price"), col("qty"),
+        col("side").cast("int").as("side"), symbol.as("symbol"))
+
+  /** Sided trades plus the two flush sentinels — the fixture for the
+    * directional / footprint state-machine gates.
     */
   private def sidedFileStream(s: SparkSession, dir: String,
                               tmpName: String): DataFrame = {
-    val sided = Trades.withTickRuleSide(
-        Trades.fromEvents(graft.Tables.events(s, dir)))
-      .select(col("ts"), col("id"), col("price"), col("qty"),
-        col("side").cast("int").as("side"), lit(0L).as("symbol"))
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"), tmpName)
-      .getAbsolutePath
-    val p = new org.apache.hadoop.fs.Path(tmp)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    val t0 = System.currentTimeMillis()
-    writeOneFile(sided, tmp, "a_data", t0 - 60000)
-    def sentinel(ns: Long, id: Long) =
-      s.range(1).select(lit(ns).as("ts"), lit(id).as("id"),
-        lit(1.0).as("price"), lit(1.0).as("qty"),
-        lit(0).as("side"), lit(0L).as("symbol"))
-    writeOneFile(sentinel(sentinelNs, 9000000000L), tmp, "b_s1", t0 - 40000)
-    writeOneFile(sentinel(sentinelNs + 600000000000L, 9000000001L),
-      tmp, "c_s2", t0 - 20000)
-    s.readStream
-      .schema(sided.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(tmp + "/*")
+    val sided = sidedTrades(s, dir, Nil, lit(0L))
+    batchFileStream(s, tmpName, Seq("a_data" -> sided,
+      "b_s1" -> sentinelRow(sided, 0), "c_s2" -> sentinelRow(sided, 1)))
   }
 
   /** Canonical trades (symbol pinned to 0 — the unkeyed batch twins) split
-    * at the median timestamp into TWO files (= two micro-batches under
-    * maxFilesPerTrigger=1) — the fixture for the NoTimeout per-key state
-    * machines (threshold bars / EWMA / CUSUM): every bar, EWMA value or
-    * event that straddles the split proves cross-batch state, and no
-    * sentinels are needed because the machines emit as they fold.
+    * at the median ts — the fixture for the NoTimeout per-key state
+    * machines (threshold bars / EWMA / CUSUM): no sentinels are needed
+    * because the machines emit as they fold; `flush` adds one for a
+    * lookahead-1 machine.
     */
   private def splitTradeFileStream(s: SparkSession, dir: String,
                                    tmpName: String,
                                    flush: Boolean = false): DataFrame = {
-    // persisted: the median agg + both split writes (+ flush) each ACTION
-    // on this frame — without the persist the canonicalization re-scans
-    // the events parquet 3-4x (guide §1.2: remove repeated passes)
+    // persisted: the median agg + both split writes each ACTION on this
+    // frame — without the persist the canonicalization re-scans the
+    // events parquet 3x (guide §1.2: remove repeated passes)
     val trades = Trades.fromEvents(graft.Tables.events(s, dir))
       .select(col("ts"), col("id"), col("price"), col("qty"),
         lit(0L).as("symbol"))
       .persist(graft.Conf.storageLevel)
-    val mid = trades.agg(expr("cast(median(ts) as bigint)")).head().getLong(0)
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"), tmpName)
-      .getAbsolutePath
-    val p = new org.apache.hadoop.fs.Path(tmp)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    val t0 = System.currentTimeMillis()
-    writeOneFile(trades.where(col("ts") <= mid), tmp, "a_early", t0 - 40000)
-    writeOneFile(trades.where(col("ts") > mid), tmp, "b_late", t0 - 20000)
-    if (flush)
-      // one far-future heartbeat row flushes a lookahead-1 machine's
-      // pending tail; the heartbeat itself stays pending and never emits
-      writeOneFile(s.range(1).select(lit(sentinelNs).as("ts"),
-        lit(9000000000L).as("id"), lit(1.0).as("price"),
-        lit(1.0).as("qty"), lit(0L).as("symbol")), tmp, "c_flush", t0 - 10000)
-    s.readStream.schema(trades.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(tmp + "/*")
+    batchFileStream(s, tmpName, medianSplit(trades) ++
+      (if (flush) Seq("c_flush" -> sentinelRow(trades, 0)) else Nil))
   }
 
-  /** [[splitTradeFileStream]] with the tick-rule side attached — the
-    * fixture for the imbalance/run-bar state machines. Side assignment is
-    * a GLOBAL scan and happens upstream at ingest, exactly as for the
-    * directional gates; the stream under test is the bar machine.
+  /** [[sidedTrades]] split at the median ts — the fixture for the
+    * imbalance/run-bar state machines.
     */
   private def splitSidedFileStream(s: SparkSession, dir: String,
-                                   tmpName: String): DataFrame = {
+                                   tmpName: String): DataFrame =
     // persisted: median + two split writes each re-run the tick-rule
     // window (a full sort) without it — 3 passes folded to 1
-    val sided = Trades.withTickRuleSide(
-        Trades.fromEvents(graft.Tables.events(s, dir)))
-      .select(col("ts"), col("id"), col("price"), col("qty"),
-        col("side").cast("int").as("side"), lit(0L).as("symbol"))
-      .persist(graft.Conf.storageLevel)
-    val mid = sided.agg(expr("cast(median(ts) as bigint)")).head().getLong(0)
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"), tmpName)
-      .getAbsolutePath
-    val p = new org.apache.hadoop.fs.Path(tmp)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    val t0 = System.currentTimeMillis()
-    writeOneFile(sided.where(col("ts") <= mid), tmp, "a_early", t0 - 40000)
-    writeOneFile(sided.where(col("ts") > mid), tmp, "b_late", t0 - 20000)
-    s.readStream.schema(sided.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(tmp + "/*")
-  }
+    batchFileStream(s, tmpName, medianSplit(
+      sidedTrades(s, dir, Nil, lit(0L)).persist(graft.Conf.storageLevel)))
 
-  /** [[splitSidedFileStream]] with REAL symbols and the PER-SYMBOL tick
-    * rule — the fixture for the keyed streaming machines: ~150 concurrent
-    * per-symbol states, every symbol's stream straddling the median-ts
-    * split, so the cross-batch handoff is exercised across the whole key
-    * space rather than one pinned key.
-    */
   /** [[splitTradeFileStream]] with the REAL symbol column — the fixture
     * for keyed per-symbol state machines (every symbol's stream straddles
-    * the two-batch split).
+    * the two-batch split); `flush` adds [[symbolHeartbeats]].
     */
   private def splitKeyedTradeFileStream(s: SparkSession, dir: String,
                                         tmpName: String,
@@ -367,62 +354,28 @@ object StreamQueries {
     val trades = Trades.fromEvents(graft.Tables.events(s, dir))
       .select(col("ts"), col("id"), col("price"), col("qty"), col("symbol"))
       .persist(graft.Conf.storageLevel)
-    val mid = trades.agg(expr("cast(median(ts) as bigint)")).head().getLong(0)
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"), tmpName)
-      .getAbsolutePath
-    val p = new org.apache.hadoop.fs.Path(tmp)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    val t0 = System.currentTimeMillis()
-    writeOneFile(trades.where(col("ts") <= mid), tmp, "a_early", t0 - 40000)
-    writeOneFile(trades.where(col("ts") > mid), tmp, "b_late", t0 - 20000)
-    if (flush)
-      // one far-future heartbeat row PER SYMBOL flushes every per-symbol
-      // lookahead-1 tail; heartbeats themselves stay pending, never emit
-      writeOneFile(trades.select(col("symbol")).distinct()
-        .select(lit(sentinelNs).as("ts"),
-          (lit(9000000000L) + col("symbol")).as("id"), lit(1.0).as("price"),
-          lit(1.0).as("qty"), col("symbol")), tmp, "c_flush", t0 - 10000)
-    s.readStream.schema(trades.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(tmp + "/*")
+    batchFileStream(s, tmpName, medianSplit(trades) ++
+      (if (flush) Seq("c_flush" -> symbolHeartbeats(trades)) else Nil))
   }
 
+  /** [[splitSidedFileStream]] with REAL symbols and the PER-SYMBOL tick
+    * rule — the fixture for the keyed streaming machines: ~150 concurrent
+    * per-symbol states, every symbol's stream straddling the median-ts
+    * split, so the cross-batch handoff is exercised across the whole key
+    * space rather than one pinned key. `sentinels` adds the two flush
+    * rows (one symbol-0 row per file suffices: timeouts fire for every
+    * key).
+    */
   private def splitKeyedSidedFileStream(s: SparkSession, dir: String,
                                         tmpName: String,
                                         sentinels: Boolean = false): DataFrame = {
     // persisted: median + both split writes each re-run the per-symbol
     // tick-rule window (shuffle + sort) without it
-    val sided = Trades.withTickRuleSide(
-        Trades.fromEvents(graft.Tables.events(s, dir)), Seq("symbol"))
-      .select(col("ts"), col("id"), col("price"), col("qty"),
-        col("side").cast("int").as("side"), col("symbol"))
+    val sided = sidedTrades(s, dir, Seq("symbol"), col("symbol"))
       .persist(graft.Conf.storageLevel)
-    val mid = sided.agg(expr("cast(median(ts) as bigint)")).head().getLong(0)
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"), tmpName)
-      .getAbsolutePath
-    val p = new org.apache.hadoop.fs.Path(tmp)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    val t0 = System.currentTimeMillis()
-    writeOneFile(sided.where(col("ts") <= mid), tmp, "a_early", t0 - 40000)
-    writeOneFile(sided.where(col("ts") > mid), tmp, "b_late", t0 - 20000)
-    if (sentinels) {
-      // two far-future single-row files advance the (GLOBAL) event-time
-      // watermark past every real bar + delay — watermarks lag one batch,
-      // so the second sentinel's batch finalizes everything; one symbol-0
-      // row per file suffices, timeouts fire for every key
-      def sentinel(ns: Long, id: Long) =
-        s.range(1).select(lit(ns).as("ts"), lit(id).as("id"),
-          lit(1.0).as("price"), lit(1.0).as("qty"), lit(0).as("side"),
-          lit(0L).as("symbol"))
-      writeOneFile(sentinel(sentinelNs, 9000000000L), tmp, "c_s1", t0 - 15000)
-      writeOneFile(sentinel(sentinelNs + 600000000000L, 9000000001L),
-        tmp, "d_s2", t0 - 10000)
-    }
-    s.readStream.schema(sided.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(tmp + "/*")
+    batchFileStream(s, tmpName, medianSplit(sided) ++
+      (if (sentinels) Seq("c_s1" -> sentinelRow(sided, 0),
+        "d_s2" -> sentinelRow(sided, 1)) else Nil))
   }
 
   /** Join drained per-trade bar ids back to the canonical trades (the
@@ -1290,34 +1243,19 @@ object StreamQueries {
     // features, and the hash proves it.
     "streaming_directional_unordered" -> ((s, dir) => {
       import s.implicits._
-      val sided = Trades.withTickRuleSide(
-          Trades.fromEvents(graft.Tables.events(s, dir)))
-        .select(col("ts"), col("id"), col("price"), col("qty"),
-          col("side").cast("int").as("side"), lit(0L).as("symbol"))
+      val sided = sidedTrades(s, dir, Nil, lit(0L))
         .persist(graft.Conf.storageLevel) // median + split writes: 3 passes -> 1
       val st = sided.agg(expr("cast(median(ts) as bigint)"),
         min(col("ts")), max(col("ts"))).head()
       val (mid, lo, hi) = (st.getLong(0), st.getLong(1), st.getLong(2))
-      val tmp = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_gate_stream_diru_$runId").getAbsolutePath
-      val pth = new org.apache.hadoop.fs.Path(tmp)
-      val fs = pth.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(pth)) fs.delete(pth, true)
-      val t0 = System.currentTimeMillis()
-      writeOneFile(sided.where(col("ts") > mid), tmp, "a_late", t0 - 50000)
-      writeOneFile(sided.where(col("ts") <= mid), tmp, "b_early", t0 - 40000)
-      def sentinel(ns: Long, id: Long) =
-        s.range(1).select(lit(ns).as("ts"), lit(id).as("id"),
-          lit(1.0).as("price"), lit(1.0).as("qty"),
-          lit(0).as("side"), lit(0L).as("symbol"))
-      writeOneFile(sentinel(sentinelNs, 9000000000L), tmp, "c_s1", t0 - 30000)
-      writeOneFile(sentinel(sentinelNs + 600000000000L, 9000000001L),
-        tmp, "d_s2", t0 - 20000)
       // the delay must cover the full data span: every real trade stays
       // above the watermark until the sentinels flush, whatever file order
       val delay = s"${(hi - lo) / 3600000000000L + 3} hours"
-      val src = s.readStream.schema(sided.schema)
-        .option("maxFilesPerTrigger", 1).parquet(tmp + "/*")
+      // the late half arrives first, then the two flush sentinels
+      val src = batchFileStream(s, s"graft_gate_stream_diru_$runId", Seq(
+          "a_late" -> sided.where(col("ts") > mid),
+          "b_early" -> sided.where(col("ts") <= mid),
+          "c_s1" -> sentinelRow(sided, 0), "d_s2" -> sentinelRow(sided, 1)))
         .as[StreamingBars.SidedSymIn]
       val bars = StreamingBars.directionalBufferedStream(src, 3600, delay)
       drain(bars.toDF(), "gate_stream_dir_unord")
@@ -1398,15 +1336,10 @@ object StreamQueries {
       writeOneFile(trades.where(col("ts") <= mid), srcDir, "a_early",
         t0 - 60000)
       runOnce() // phase 1: early half only; straddling-bar state checkpoints
-      def sentinel(ns: Long, id: Long) =
-        s.range(1).select(lit(ns).as("ts"), lit(id).as("id"),
-          lit(1.0).as("price"), lit(1.0).as("qty"), lit(0L).as("symbol"))
       writeOneFile(trades.where(col("ts") > mid), srcDir, "b_late",
         t0 - 40000)
-      writeOneFile(sentinel(sentinelNs, 9000000000L), srcDir, "c_s1",
-        t0 - 30000)
-      writeOneFile(sentinel(sentinelNs + 600000000000L, 9000000001L),
-        srcDir, "d_s2", t0 - 20000)
+      writeOneFile(sentinelRow(trades, 0), srcDir, "c_s1", t0 - 30000)
+      writeOneFile(sentinelRow(trades, 1), srcDir, "d_s2", t0 - 20000)
       runOnce() // phase 2: fresh query, same checkpoint — offsets + state
       canonBars(s.read.parquet(base + "/out"))
     }),
@@ -1451,10 +1384,7 @@ object StreamQueries {
       runOnce() // phase 1: every symbol ends with a pending lookahead row
       writeOneFile(trades.where(col("ts") > mid), srcDir, "b_late",
         t0 - 40000)
-      writeOneFile(trades.select(col("symbol")).distinct()
-        .select(lit(sentinelNs).as("ts"),
-          (lit(9000000000L) + col("symbol")).as("id"), lit(1.0).as("price"),
-          lit(1.0).as("qty"), col("symbol")), srcDir, "c_flush", t0 - 20000)
+      writeOneFile(symbolHeartbeats(trades), srcDir, "c_flush", t0 - 20000)
       runOnce() // phase 2: fresh query, same checkpoint — pending rows resume
       s.read.parquet(base + "/out")
         .where(col("isEvent"))
@@ -1472,10 +1402,7 @@ object StreamQueries {
     // and shifts every later close). run_bars' oracle verbatim.
     "streaming_restart_run_bars" -> ((s, dir) => {
       import s.implicits._
-      val sided = Trades.withTickRuleSide(
-          Trades.fromEvents(graft.Tables.events(s, dir)))
-        .select(col("ts"), col("id"), col("price"), col("qty"),
-          col("side").cast("int").as("side"), lit(0L).as("symbol"))
+      val sided = sidedTrades(s, dir, Nil, lit(0L))
         .persist(graft.Conf.storageLevel) // median + split writes: 3 passes -> 1
       val mid = sided.agg(expr("cast(median(ts) as bigint)")).head().getLong(0)
       val base = new java.io.File(sys.props("java.io.tmpdir"),
@@ -1530,10 +1457,7 @@ object StreamQueries {
     // gates answer verbatim).
     "streaming_restart_directional_buffered" -> ((s, dir) => {
       import s.implicits._
-      val sided = Trades.withTickRuleSide(
-          Trades.fromEvents(graft.Tables.events(s, dir)))
-        .select(col("ts"), col("id"), col("price"), col("qty"),
-          col("side").cast("int").as("side"), lit(0L).as("symbol"))
+      val sided = sidedTrades(s, dir, Nil, lit(0L))
         .persist(graft.Conf.storageLevel) // median + split writes: 3 passes -> 1
       val mid = sided.agg(expr("cast(median(ts) as bigint)")).head().getLong(0)
       val base = new java.io.File(sys.props("java.io.tmpdir"),
@@ -1571,16 +1495,10 @@ object StreamQueries {
         s"restart gate degenerate: phase 1 emitted bar_ts=$max1 past the " +
           s"watermark mid-2h=${mid - 2L * hourNs} — nothing was buffered " +
           "across the kill")
-      def sentinel(ns: Long, id: Long) =
-        s.range(1).select(lit(ns).as("ts"), lit(id).as("id"),
-          lit(1.0).as("price"), lit(1.0).as("qty"),
-          lit(0).as("side"), lit(0L).as("symbol"))
       writeOneFile(sided.where(col("ts") > mid), srcDir, "b_late",
         t0 - 40000)
-      writeOneFile(sentinel(sentinelNs, 9000000000L), srcDir, "c_s1",
-        t0 - 30000)
-      writeOneFile(sentinel(sentinelNs + 600000000000L, 9000000001L),
-        srcDir, "d_s2", t0 - 20000)
+      writeOneFile(sentinelRow(sided, 0), srcDir, "c_s1", t0 - 30000)
+      writeOneFile(sentinelRow(sided, 1), srcDir, "d_s2", t0 - 20000)
       runOnce() // phase 2: fresh query — restored row buffers finalize
       s.read.parquet(base + "/out")
         .where(col("bar_ts") < sentinelNs)
@@ -1612,10 +1530,7 @@ object StreamQueries {
     // the trailing 2h of bars still open in state.
     "streaming_restart_footprint_summary" -> ((s, dir) => {
       import s.implicits._
-      val sided = Trades.withTickRuleSide(
-          Trades.fromEvents(graft.Tables.events(s, dir)))
-        .select(col("ts"), col("id"), col("price"), col("qty"),
-          col("side").cast("int").as("side"), lit(0L).as("symbol"))
+      val sided = sidedTrades(s, dir, Nil, lit(0L))
         .persist(graft.Conf.storageLevel) // median + split writes: 3 passes -> 1
       val mid = sided.agg(expr("cast(median(ts) as bigint)")).head().getLong(0)
       val base = new java.io.File(sys.props("java.io.tmpdir"),
@@ -1650,16 +1565,10 @@ object StreamQueries {
         s"restart gate degenerate: phase 1 emitted bar_ts=$max1 past the " +
           s"watermark mid-2h=${mid - 2L * hourNs} — nothing was buffered " +
           "across the kill")
-      def sentinel(ns: Long, id: Long) =
-        s.range(1).select(lit(ns).as("ts"), lit(id).as("id"),
-          lit(1.0).as("price"), lit(1.0).as("qty"),
-          lit(0).as("side"), lit(0L).as("symbol"))
       writeOneFile(sided.where(col("ts") > mid), srcDir, "b_late",
         t0 - 40000)
-      writeOneFile(sentinel(sentinelNs, 9000000000L), srcDir, "c_s1",
-        t0 - 30000)
-      writeOneFile(sentinel(sentinelNs + 600000000000L, 9000000001L),
-        srcDir, "d_s2", t0 - 20000)
+      writeOneFile(sentinelRow(sided, 0), srcDir, "c_s1", t0 - 30000)
+      writeOneFile(sentinelRow(sided, 1), srcDir, "d_s2", t0 - 20000)
       runOnce() // phase 2: fresh query — restored buffers build the grids
       s.read.parquet(base + "/out")
         .where(col("bar_ts") < sentinelNs)
@@ -2038,33 +1947,18 @@ object StreamQueries {
     // (time_bars_directional_sym's oracle verbatim, daily bars).
     "streaming_directional_unordered_sym" -> ((s, dir) => {
       import s.implicits._
-      val sided = Trades.withTickRuleSide(
-          Trades.fromEvents(graft.Tables.events(s, dir)), Seq("symbol"))
-        .select(col("ts"), col("id"), col("price"), col("qty"),
-          col("side").cast("int").as("side"), col("symbol"))
+      val sided = sidedTrades(s, dir, Seq("symbol"), col("symbol"))
         .persist(graft.Conf.storageLevel) // median + split writes: 3 passes -> 1
       val st = sided.agg(expr("cast(median(ts) as bigint)"),
         min(col("ts")), max(col("ts"))).head()
       val (mid, lo, hi) = (st.getLong(0), st.getLong(1), st.getLong(2))
-      val tmp = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_gate_stream_dirusym_$runId").getAbsolutePath
-      val pth = new org.apache.hadoop.fs.Path(tmp)
-      val fs = pth.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(pth)) fs.delete(pth, true)
-      val t0 = System.currentTimeMillis()
-      writeOneFile(sided.where(col("ts") > mid), tmp, "a_late", t0 - 50000)
-      writeOneFile(sided.where(col("ts") <= mid), tmp, "b_early", t0 - 40000)
-      def sentinel(ns: Long, id: Long) =
-        s.range(1).select(lit(ns).as("ts"), lit(id).as("id"),
-          lit(1.0).as("price"), lit(1.0).as("qty"),
-          lit(0).as("side"), lit(0L).as("symbol"))
-      writeOneFile(sentinel(sentinelNs, 9000000000L), tmp, "c_s1", t0 - 30000)
-      writeOneFile(sentinel(sentinelNs + 600000000000L, 9000000001L),
-        tmp, "d_s2", t0 - 20000)
       // delay covers the full span so no real trade is late-dropped
       val delay = s"${(hi - lo) / 3600000000000L + 3} hours"
-      val src = s.readStream.schema(sided.schema)
-        .option("maxFilesPerTrigger", 1).parquet(tmp + "/*")
+      // the late half arrives first, then the two flush sentinels
+      val src = batchFileStream(s, s"graft_gate_stream_dirusym_$runId", Seq(
+          "a_late" -> sided.where(col("ts") > mid),
+          "b_early" -> sided.where(col("ts") <= mid),
+          "c_s1" -> sentinelRow(sided, 0), "d_s2" -> sentinelRow(sided, 1)))
         .as[StreamingBars.SidedSymIn]
       val bars = StreamingBars.directionalBufferedStream(src, 86400,
         watermarkDelay = delay)

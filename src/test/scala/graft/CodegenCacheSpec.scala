@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-/** Spark's generated-class cache, sized by [[Conf.engineDefaults]]. */
+/** Spark's generated-class cache, sized by [[Conf.engineDefaults]], and
+  * the one session factory that applies it.
+  */
 class CodegenCacheSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = TestSession.spark
@@ -59,6 +61,28 @@ class CodegenCacheSpec extends AnyFunSuite {
       .write.parquet(s"$dir/out")
     Seq(stored, fm, ev, lab).foreach(_.unpersist(blocking = true))
     spark.read.parquet(s"$dir/out").count()
+  }
+
+  test("every session is built by Conf.localSession over the engine defaults") {
+    // split so this file does not match its own pattern
+    val pattern = "SparkSession.builder" + "("
+    val hits = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      val dir = new java.io.File(root)
+      assert(dir.isDirectory, s"run from the repo root: $root not found")
+      org.apache.commons.io.FileUtils
+        .listFiles(dir, Array("scala"), true).toArray.toSeq
+        .map(_.asInstanceOf[java.io.File])
+        .flatMap { f =>
+          val n = Files.readString(f.toPath)
+            .split(java.util.regex.Pattern.quote(pattern), -1).length - 1
+          Seq.fill(n)(f.getName)
+        }
+    }
+    assert(hits == Seq("Conf.scala"),
+      s"session builders outside Conf.localSession: ${hits.mkString(", ")}")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
   test("a repeated trade lineage reuses its generated classes instead of recompiling") {

@@ -41,8 +41,9 @@ def main():
         con.execute(f"SET temp_directory='{tmp}'")
     for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
         name = os.path.basename(p)[:-len(".parquet")]
-        # Spark-written tables are DIRECTORIES of part files (e.g. a
-        # SymFixture output); driver testdata tables are single files
+        # Spark-written tables are DIRECTORIES of part files (e.g. the
+        # many-symbol fixture of the SYM_SCALING `sym_oracle_spot` line);
+        # driver testdata tables are single files
         src = f"{p}/*.parquet" if os.path.isdir(p) else p
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{src}')")
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
